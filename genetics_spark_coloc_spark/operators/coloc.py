@@ -12,9 +12,13 @@ Input is the study_locus_overlap shape: one row per
 (leftStudyLocusId, rightStudyLocusId, tagVariantId) with a
 ``statistics`` struct of left_*/right_* tag stats.
 
-Scale notes: one shuffle — groupBy the locus pair (fine-grained key).
-The beta-ratio join is pair-keyed agg joined back on the same key, so
-AQE plans it after the same exchange.
+Scale notes: one shuffle per method — groupBy the locus pair
+(fine-grained key). The beta-ratio sign average rides inside that
+same aggregation, so each method reads its input once and plans no
+join. Each method is one projection, the aggregation and one
+projection (COLOC adds its filter and softmax), not a withColumn
+chain: every DataFrame call re-analyses the whole input plan, and in
+``pipelines.coloc_pipeline`` that input is the deep overlap plan.
 """
 
 from __future__ import annotations
@@ -30,6 +34,8 @@ from genetics_spark_coloc_spark.functions.reshape import (
 )
 
 PAIR_KEYS = ["leftStudyLocusId", "rightStudyLocusId", "rightStudyType", "chromosome"]
+# leading output columns of both methods, in this order
+OUTPUT_KEYS = ["leftStudyLocusId", "rightStudyLocusId", "chromosome", "rightStudyType"]
 
 # COLOC constants (reference: colocalisation.py:210-219)
 PSEUDOCOUNT = 1e-10
@@ -51,26 +57,22 @@ def tag_variant_source(statistics: Column) -> Column:
     )
 
 
-def calculate_beta_ratio(overlaps: DataFrame) -> DataFrame:
-    """Average sign of left/right beta ratio per pair
-    (reference: dataset/study_locus_overlap.py:55-83)."""
-    return (
-        overlaps.select(
-            "leftStudyLocusId",
-            "rightStudyLocusId",
-            "chromosome",
-            F.col("statistics.left_beta").alias("left_beta"),
-            F.col("statistics.right_beta").alias("right_beta"),
-        )
-        .filter(
-            F.col("left_beta").isNotNull()
-            & F.col("right_beta").isNotNull()
-            & (F.col("left_beta") != 0)
-            & (F.col("right_beta") != 0)
-        )
-        .withColumn("betaRatioSign", F.signum(F.col("left_beta") / F.col("right_beta")))
-        .groupBy("leftStudyLocusId", "rightStudyLocusId", "chromosome")
-        .agg(F.avg("betaRatioSign").alias("betaRatioSignAverage"))
+def beta_ratio_sign(statistics: Column) -> Column:
+    """Sign of left/right beta for one tag, null unless both betas are
+    non-null and non-zero; its per-pair average is
+    ``betaRatioSignAverage`` (reference:
+    dataset/study_locus_overlap.py:55-83).
+
+    The reference averages per (leftStudyLocusId, rightStudyLocusId,
+    chromosome); both methods average per ``PAIR_KEYS`` instead, which
+    adds ``rightStudyType``. The two groupings are equal because a
+    study locus has one study type, so ``rightStudyType`` is a function
+    of ``rightStudyLocusId``.
+    """
+    left, right = statistics["left_beta"], statistics["right_beta"]
+    return F.when(
+        left.isNotNull() & right.isNotNull() & (left != 0) & (right != 0),
+        F.signum(left / right),
     )
 
 
@@ -79,13 +81,21 @@ def ecaviar(overlaps: DataFrame) -> DataFrame:
 
     clpp = Σ_tags left_pp * right_pp; pure groupBy-sum.
     """
+    stats = F.col("statistics")
+    # non-null per-tag products in tag order: SUM-with-null-skip folds
+    # them, so an all-null group gives NULL (matches F.sum / SQL SUM)
+    clpps = F.filter(F.col("tags.clpp"), lambda x: x.isNotNull())
     return (
-        overlaps.withColumn(
-            "clpp",
-            F.col("statistics.left_posteriorProbability")
-            * F.col("statistics.right_posteriorProbability"),
+        overlaps.select(
+            *PAIR_KEYS,
+            "tagVariantId",
+            tag_variant_source(stats).alias("tagVariantSource"),
+            (
+                stats["left_posteriorProbability"]
+                * stats["right_posteriorProbability"]
+            ).alias("clpp"),
+            beta_ratio_sign(stats).alias("betaRatioSign"),
         )
-        .withColumn("tagVariantSource", tag_variant_source(F.col("statistics")))
         .groupBy(*PAIR_KEYS)
         .agg(
             # tag-sorted struct: deterministic summation order so the
@@ -94,30 +104,20 @@ def ecaviar(overlaps: DataFrame) -> DataFrame:
                 F.collect_list(
                     F.struct("tagVariantId", "tagVariantSource", "clpp")
                 )
-            ).alias("tags")
+            ).alias("tags"),
+            F.avg("betaRatioSign").alias("betaRatioSignAverage"),
         )
-        .withColumn(
-            "numberColocalisingVariants",
+        .select(
+            *OUTPUT_KEYS,
             F.size(
                 F.filter(F.col("tags.tagVariantSource"), lambda x: x == "both")
-            ).cast("long"),
-        )
-        .withColumn("_clpps", F.filter(F.col("tags.clpp"), lambda x: x.isNotNull()))
-        .withColumn(
-            # SUM-with-null-skip semantics: fold non-null values in tag
-            # order; all-null group -> NULL (matches F.sum / SQL SUM)
-            "clpp",
+            ).cast("long").alias("numberColocalisingVariants"),
             F.when(
-                F.size("_clpps") > 0,
-                F.aggregate(F.col("_clpps"), F.lit(0.0), lambda acc, x: acc + x),
-            ),
-        )
-        .drop("tags", "_clpps")
-        .withColumn("colocalisationMethod", F.lit("eCAVIAR"))
-        .join(
-            calculate_beta_ratio(overlaps),
-            on=["leftStudyLocusId", "rightStudyLocusId", "chromosome"],
-            how="left",
+                F.size(clpps) > 0,
+                F.aggregate(clpps, F.lit(0.0), lambda acc, x: acc + x),
+            ).alias("clpp"),
+            F.lit("eCAVIAR").alias("colocalisationMethod"),
+            "betaRatioSignAverage",
         )
     )
 
@@ -142,26 +142,25 @@ def coloc(
 
     posteriors = softmax([lH0..lH4]).
     """
+    stats = F.col("statistics")
+    left_bf = F.coalesce(stats["left_logBF"], F.lit(0.0))
+    right_bf = F.coalesce(stats["right_logBF"], F.lit(0.0))
     # collect ONE tag-sorted struct array: (a) every derived array is
     # pairwise-aligned by construction, (b) summation order is
     # deterministic (sorted by tagVariantId), so posteriors are
     # bit-reproducible across partitionings and re-runs
     grouped = (
-        overlaps.withColumn("tagVariantSource", tag_variant_source(F.col("statistics")))
-        .select(
+        overlaps.select(
             *PAIR_KEYS,
             "tagVariantId",
-            "tagVariantSource",
-            F.coalesce(F.col("statistics.left_logBF"), F.lit(0.0)).alias("left_logBF"),
-            F.coalesce(F.col("statistics.right_logBF"), F.lit(0.0)).alias("right_logBF"),
-            F.coalesce(F.col("statistics.left_posteriorProbability"), F.lit(0.0)).alias(
-                "left_pp"
-            ),
-            F.coalesce(F.col("statistics.right_posteriorProbability"), F.lit(0.0)).alias(
-                "right_pp"
-            ),
+            tag_variant_source(stats).alias("tagVariantSource"),
+            left_bf.alias("left_logBF"),
+            right_bf.alias("right_logBF"),
+            (left_bf + right_bf).alias("sum_log_bf"),
+            F.coalesce(stats["left_posteriorProbability"], F.lit(0.0)).alias("left_pp"),
+            F.coalesce(stats["right_posteriorProbability"], F.lit(0.0)).alias("right_pp"),
+            beta_ratio_sign(stats).alias("betaRatioSign"),
         )
-        .withColumn("sum_log_bf", F.col("left_logBF") + F.col("right_logBF"))
         .groupBy(*PAIR_KEYS)
         .agg(
             F.sort_array(
@@ -176,21 +175,22 @@ def coloc(
                         "right_pp",
                     )
                 )
-            ).alias("tags")
+            ).alias("tags"),
+            F.avg("betaRatioSign").alias("betaRatioSignAverage"),
         )
-        .withColumn(
-            "numberColocalisingVariants",
+        .select(
+            *PAIR_KEYS,
+            "betaRatioSignAverage",
             F.size(
                 F.filter(F.col("tags.tagVariantSource"), lambda x: x == "both")
-            ).cast("long"),
+            ).cast("long").alias("numberColocalisingVariants"),
+            F.col("tags.left_pp").alias("left_pps"),
+            F.col("tags.right_pp").alias("right_pps"),
+            F.col("tags.tagVariantSource").alias("sources"),
+            logsumexp(F.col("tags.left_logBF")).alias("logsum1"),
+            logsumexp(F.col("tags.right_logBF")).alias("logsum2"),
+            logsumexp(F.col("tags.sum_log_bf")).alias("logsum12"),
         )
-        .withColumn("left_pps", F.col("tags.left_pp"))
-        .withColumn("right_pps", F.col("tags.right_pp"))
-        .withColumn("sources", F.col("tags.tagVariantSource"))
-        .withColumn("logsum1", logsumexp(F.col("tags.left_logBF")))
-        .withColumn("logsum2", logsumexp(F.col("tags.right_logBF")))
-        .withColumn("logsum12", logsumexp(F.col("tags.sum_log_bf")))
-        .drop("tags")
     )
 
     # "any tag has high posterior on both sides" rescue for small overlaps
@@ -225,26 +225,21 @@ def coloc(
     lh4 = F.lit(math.log(priorc12)) + F.col("logsum12")
 
     return (
-        grouped.withColumn("anySnpBothSidesHigh", any_snp_both_sides_high)
-        .filter(
+        grouped.filter(
             (F.col("numberColocalisingVariants") > OVERLAP_SIZE_CUTOFF)
-            | F.col("anySnpBothSidesHigh")
+            | any_snp_both_sides_high
         )
         .withColumn("posteriors", softmax(F.array(lh0, lh1, lh2, lh3, lh4)))
         .select(
-            *PAIR_KEYS,
+            *OUTPUT_KEYS,
             "numberColocalisingVariants",
             F.col("posteriors")[0].alias("h0"),
             F.col("posteriors")[1].alias("h1"),
             F.col("posteriors")[2].alias("h2"),
             F.col("posteriors")[3].alias("h3"),
             F.col("posteriors")[4].alias("h4"),
-        )
-        .withColumn("colocalisationMethod", F.lit("COLOC"))
-        .join(
-            calculate_beta_ratio(overlaps),
-            on=["leftStudyLocusId", "rightStudyLocusId", "chromosome"],
-            how="left",
+            F.lit("COLOC").alias("colocalisationMethod"),
+            "betaRatioSignAverage",
         )
     )
 

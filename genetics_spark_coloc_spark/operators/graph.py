@@ -104,7 +104,8 @@ def connected_components(
 
     vertices: one row per vertex (``id_col``); edges: undirected
     pairs (``src_col``, ``dst_col``) whose endpoints appear in
-    ``vertices``. Returns (id, component).
+    ``vertices``; an edge with a null endpoint is dropped. Returns
+    (id, component).
 
     r14 kernel shape (all three changes preserve the result bit-exactly
     and were A/B-verified against the old kernel on the sf0.1 LSH
@@ -245,7 +246,7 @@ def connected_components(
                 continue
         return out
 
-    def _drop_superseded(keep_ids: "set[int]") -> None:
+    def _drop_superseded(keep_ids: "set[int]", keep_newest: bool = True) -> None:
         # delete every materialized round checkpoint except the
         # NEWEST (the current labels — the only one later rounds and
         # the returned DataFrame read) and the pinned keep set (sym)
@@ -254,7 +255,7 @@ def connected_components(
         dirs = _rdd_dirs()
         if not dirs:
             return
-        newest = max(dirs)
+        newest = max(dirs) if keep_newest else None
         fs = spark._jvm.org.apache.hadoop.fs.Path(ckpt_root).getFileSystem(
             spark._jsc.hadoopConfiguration()
         )
@@ -262,6 +263,11 @@ def connected_components(
             if rid != newest and rid not in keep_ids:
                 fs.delete(p, True)
 
+    # an edge with a null endpoint connects nothing (null never equals
+    # null, so the loop cannot propagate through it) and the driver
+    # union-find cannot order or hash-match a null id; drop it up
+    # front so both paths see the same graph
+    edges = edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionByName(
@@ -440,8 +446,10 @@ def connected_components(
         # sym's pinned checkpoints are garbage once the bridging check
         # (their last consumer) is behind us: the returned DataFrame's
         # lineage is truncated at the final labels checkpoint, which
-        # is the one rdd dir this sweep leaves on disk
-        _drop_superseded(set())
+        # is the one rdd dir this sweep leaves on disk. Fast-path
+        # labels are built on the driver and read no checkpoint, so
+        # that path keeps none.
+        _drop_superseded(set(), keep_newest=fast_n is None)
     if stats_out is not None:
         stats_out["rounds"] = executed
         stats_out["propagations"] = spent

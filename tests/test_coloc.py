@@ -15,7 +15,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from genetics_spark_coloc_spark.operators.coloc import calculate_beta_ratio, coloc, ecaviar
+from genetics_spark_coloc_spark.operators.coloc import coloc, ecaviar
 
 OVERLAP_SCHEMA = StructType(
     [
@@ -161,12 +161,34 @@ def test_beta_ratio_null_when_no_betas(spark):
 
 
 def test_beta_ratio_mixed_signs(spark):
+    # pair 1-2: one positive and one negative ratio average to 0; the
+    # zero and null betas are skipped, not counted as sign 0. Pair 1-3
+    # in the same frame averages only its own tag.
     df = spark.createDataFrame(
         [
             _row("snp1", 10.3, 10.5, 0.1, 0.2, 0.91, 0.92),
             _row("snp2", 10.3, 10.5, -0.1, 0.2, 0.91, 0.92),
+            _row("snp3", 10.3, 10.5, 0.0, 0.2, 0.91, 0.92),
+            _row("snp4", 10.3, 10.5, None, 0.2, 0.91, 0.92),
+            {**_row("snp1", 10.3, 10.5, -0.3, 0.2, 0.91, 0.92), "rightStudyLocusId": "3"},
         ],
         schema=OVERLAP_SCHEMA,
     )
-    result = calculate_beta_ratio(df).collect()
-    assert result[0]["betaRatioSignAverage"] == pytest.approx(0.0)
+    for method in (ecaviar, coloc):
+        got = {
+            r["rightStudyLocusId"]: r["betaRatioSignAverage"]
+            for r in method(df).collect()
+        }
+        assert got == pytest.approx({"2": 0.0, "3": -1.0}), method.__name__
+
+
+def test_output_column_order(spark):
+    df = spark.createDataFrame(
+        [_row("snp", 10.5, 10.3, 0.1, 0.2, 0.91, 0.92)], schema=OVERLAP_SCHEMA
+    )
+    keys = ["leftStudyLocusId", "rightStudyLocusId", "chromosome", "rightStudyType"]
+    tail = ["colocalisationMethod", "betaRatioSignAverage"]
+    assert ecaviar(df).columns == keys + ["numberColocalisingVariants", "clpp"] + tail
+    assert coloc(df).columns == (
+        keys + ["numberColocalisingVariants", "h0", "h1", "h2", "h3", "h4"] + tail
+    )

@@ -65,6 +65,22 @@ def test_coloc_pipeline_end_to_end(spark):
         _sumstats("QTL1", "1", 1_000_000, 8, 3, -12), SCHEMA
     )
     result = coloc_pipeline(gwas, qtl, distance=100_000)
+    # eCAVIAR's columns, then COLOC's h0-h4 (null on eCAVIAR rows)
+    assert result.columns == [
+        "leftStudyLocusId",
+        "rightStudyLocusId",
+        "chromosome",
+        "rightStudyType",
+        "numberColocalisingVariants",
+        "clpp",
+        "colocalisationMethod",
+        "betaRatioSignAverage",
+        "h0",
+        "h1",
+        "h2",
+        "h3",
+        "h4",
+    ]
     rows = result.collect()
     methods = {r["colocalisationMethod"] for r in rows}
     assert "eCAVIAR" in methods

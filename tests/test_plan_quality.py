@@ -15,6 +15,7 @@ from genetics_spark_coloc_spark.contract import QUERIES
 from genetics_spark_coloc_spark.plans.inspect import (
     has_cartesian,
     has_python_eval,
+    optimized_plan,
     physical_plan,
     pushed_filters,
     read_schemas,
@@ -100,6 +101,28 @@ def test_overlaps_plan_shuffle_budget(spark):
     """
     df = QUERIES["find_overlaps"](spark, SF_DIR)
     assert shuffle_count(df) <= 24, f"too many exchanges: {shuffle_count(df)}"
+
+
+@pytest.mark.parametrize("method", ["ecaviar", "coloc"])
+def test_coloc_methods_plan_no_join(spark, tmp_path, method):
+    """Each colocalisation method is one aggregation over its overlap
+    input: the beta-ratio sign average rides inside it, so the
+    optimised plan holds no join (a join back onto a second
+    aggregation of the same input would plan that input twice)."""
+    from genetics_spark_coloc_spark.operators import coloc
+
+    path = str(tmp_path / "overlaps")
+    spark.createDataFrame(
+        [("1", "2", "eqtl", "1", "snp", (1.0, 2.0, 0.1, -0.2, 0.9, 0.8))],
+        "leftStudyLocusId string, rightStudyLocusId string, "
+        "rightStudyType string, chromosome string, tagVariantId string, "
+        "statistics struct<left_logBF: double, right_logBF: double, "
+        "left_beta: double, right_beta: double, "
+        "left_posteriorProbability: double, right_posteriorProbability: double>",
+    ).write.parquet(path)
+    df = getattr(coloc, method)(spark.read.parquet(path))
+    plan = optimized_plan(df)
+    assert "Join" not in plan, plan
 
 
 def test_interval_and_ivf_joins_stay_hash_shaped(spark):

@@ -65,7 +65,7 @@ def test_readme_production_loop_runs(tmp_path):
     # therefore preserved exactly; only unrelated families overlap.
     # Catalog (derby) access stays serialized for free: the only
     # catalog-using commands are the lsh_band_index/lsh_pairs chain,
-    # already ordered by the crawl_band_index token.
+    # already ordered by the crawl_band_index token (asserted below).
     resolved = []
     for cmd in cmds:
         cmd = cmd.replace("$D", SF).replace(
@@ -80,8 +80,21 @@ def test_readme_production_loop_runs(tmp_path):
         resolved.append((cmd, argv))
 
     tmp_prefix = str(tmp_path)
-    outs = [argv[argv.index("--out") + 1] for _, argv in resolved]
+    outs = []
+    for cmd, argv in resolved:
+        assert "--out" in argv, f"quickstart command has no --out: {cmd}"
+        outs.append(argv[argv.index("--out") + 1])
     bare_outs = {o for o in outs if "/" not in o}
+    catalog_steps = {"lsh_band_index", "lsh_pairs"}
+    for cmd, argv in resolved:
+        step = argv[argv.index("run") + 1]
+        touches_catalog = any(
+            part in bare_outs for a in argv for part in a.split("=")
+        )
+        assert step in catalog_steps or not touches_catalog, (
+            f"only {sorted(catalog_steps)} may use a catalog table, "
+            f"but this command does: {cmd}"
+        )
 
     def _touched(argv: list, out: str) -> tuple:
         written = {out}

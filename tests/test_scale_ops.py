@@ -3683,6 +3683,86 @@ def test_connected_components_checkpoint_lifecycle(spark, tmp_path):
     assert len([d for d in os.listdir(ckpt) if d.startswith("cc_")]) == 2
 
 
+def _cc_labels(df) -> dict:
+    return {r["id"]: r["component"] for r in df.collect()}
+
+
+def test_connected_components_fast_path_leaves_no_checkpoint(spark, tmp_path):
+    """With ``checkpoint_dir`` and ``until_converged`` set, the driver
+    fast path (default ``small_graph_edges``) builds its labels on the
+    driver, so no rdd-* checkpoint dir may remain once it returns."""
+    import os
+
+    from genetics_spark_coloc_spark.operators.graph import (
+        connected_components,
+    )
+
+    ckpt = str(tmp_path / "cc_root")
+    verts = spark.range(10).select(F.col("id").cast("long").alias("doc_id"))
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(4)], "leftId: long, rightId: long"
+    )
+    stats: dict = {}
+    out = connected_components(
+        verts, edges, "doc_id", until_converged=True,
+        checkpoint_dir=ckpt, stats_out=stats,
+    )
+    assert _cc_labels(out) == {i: 0 if i <= 4 else i for i in range(10)}
+    assert "small_graph_fast_path_edges" in stats, stats
+    rdd_dirs = [
+        d for _, dirs, _ in os.walk(ckpt) for d in dirs if d.startswith("rdd-")
+    ]
+    assert rdd_dirs == [], f"fast path left checkpoints behind: {rdd_dirs}"
+
+
+def test_connected_components_null_endpoint_string_ids(spark):
+    """An edge with a null endpoint connects nothing: the driver fast
+    path and the distributed loop both drop it and agree."""
+    from genetics_spark_coloc_spark.operators.graph import (
+        connected_components,
+    )
+
+    verts = spark.createDataFrame([("a",), ("e",)], "id string")
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), (None, "d"), ("d", None)],
+        "leftId string, rightId string",
+    )
+    want = {"a": "a", "b": "a", "c": "a", "e": "e"}
+    stats: dict = {}
+    fast = _cc_labels(
+        connected_components(verts, edges, until_converged=True, stats_out=stats)
+    )
+    assert "small_graph_fast_path_edges" in stats, stats
+    assert fast == want
+    slow = _cc_labels(
+        connected_components(verts, edges, until_converged=True, small_graph_edges=0)
+    )
+    assert slow == fast
+
+
+def test_connected_components_null_endpoint_int_ids(spark, monkeypatch):
+    """Integer ids: a null endpoint must be filtered in Spark before the
+    driver union-find collects the edges (collected, it arrives as a
+    NaN that never equals itself and the root walk never ends). The
+    wrapper fails fast instead of letting a regression hang."""
+    from genetics_spark_coloc_spark.operators import graph
+
+    solve = graph._union_find_labels
+
+    def checked(spark_, sym, id_field):
+        nulls = sym.where(F.col("src").isNull() | F.col("dst").isNull()).count()
+        assert nulls == 0, "null endpoint reached the driver union-find"
+        return solve(spark_, sym, id_field)
+
+    monkeypatch.setattr(graph, "_union_find_labels", checked)
+    verts = spark.createDataFrame([(1,), (9,)], "id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (3, 2), (None, 4)], "leftId long, rightId long"
+    )
+    got = _cc_labels(graph.connected_components(verts, edges, until_converged=True))
+    assert got == {1: 1, 2: 1, 3: 1, 9: 9}
+
+
 def test_edit_distance_verify_planted_cases(spark):
     """Planted edit-distance verification: identical → ratio 1 / dup;
     single-char edit → exact Levenshtein ratio; disjoint → low ratio;
