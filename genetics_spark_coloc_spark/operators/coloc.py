@@ -17,8 +17,10 @@ Scale notes: one shuffle per method — groupBy the locus pair
 same aggregation, so each method reads its input once and plans no
 join. Each method is one projection, the aggregation and one
 projection (COLOC adds its filter and softmax), not a withColumn
-chain: every DataFrame call re-analyses the whole input plan, and in
-``pipelines.coloc_pipeline`` that input is the deep overlap plan.
+chain: every DataFrame call re-analyses the whole input plan. In
+``pipelines.coloc_pipeline`` that input is the overlap plan over the
+checkpointed study-locus table, not the upstream clumping and
+fine-mapping plan.
 """
 
 from __future__ import annotations

@@ -1,8 +1,9 @@
 """Collect summary statistics into loci — the engine's range join.
 
 Re-expresses reference src/gentropy/dataset/study_locus.py:992-1035
-(``annotate_locus_statistics``: sumstats within ±distance of the lead)
-and :1291-1354 (within [locusStart, locusEnd]).
+(``annotate_locus_statistics``: sumstats within ±distance of the lead).
+The reference's [locusStart, locusEnd] variant (:1291-1354) has no
+caller here and is not carried.
 
 Scale design (SURVEY §4): the reference broadcasts the loci and lets
 Spark evaluate the range predicate as a nested-loop-ish residual,
@@ -83,54 +84,3 @@ def annotate_locus_statistics(
     )
     return study_locus.join(collected, on="studyLocusId", how="left")
 
-
-def annotate_locus_statistics_boundaries(
-    study_locus: DataFrame,
-    sumstats: DataFrame,
-    max_locus_width: int = 3_000_000,
-    broadcast_loci: bool = True,
-) -> DataFrame:
-    """Same, but collecting within [locusStart, locusEnd]
-    (reference: study_locus.py:1291-1354).
-
-    Binning uses ``max_locus_width`` as the bin width; each locus
-    replicates to every bin its interval touches.
-    """
-    loci = (
-        study_locus.select(
-            F.col("studyLocusId").alias("lc_studyLocusId"),
-            F.col("studyId").alias("lc_studyId"),
-            F.col("chromosome").alias("lc_chromosome"),
-            F.col("locusStart").alias("lc_start"),
-            F.col("locusEnd").alias("lc_end"),
-        )
-        .withColumn(
-            "lc_bin",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("lc_start") / max_locus_width).cast("int"),
-                    F.floor(F.col("lc_end") / max_locus_width).cast("int"),
-                )
-            ),
-        )
-    )
-    if broadcast_loci:
-        loci = F.broadcast(loci)
-
-    ss = sumstats.alias("ss").withColumn(
-        "ss_bin", F.floor(F.col("position") / max_locus_width).cast("int")
-    )
-    tagged = ss.join(
-        loci,
-        on=[
-            F.col("ss.studyId") == F.col("lc_studyId"),
-            F.col("ss.chromosome") == F.col("lc_chromosome"),
-            F.col("ss_bin") == F.col("lc_bin"),
-            F.col("ss.position").between(F.col("lc_start"), F.col("lc_end")),
-        ],
-        how="inner",
-    )
-    collected = tagged.groupBy(F.col("lc_studyLocusId").alias("studyLocusId")).agg(
-        F.collect_list(_locus_struct(sumstats.columns)).alias("locus")
-    )
-    return study_locus.join(collected, on="studyLocusId", how="left")

@@ -122,7 +122,17 @@ def align_overlapping_tags(tags: DataFrame, peak_overlaps: DataFrame) -> DataFra
 
 def find_overlaps(study_locus: DataFrame, intra_study_overlap: bool = False) -> DataFrame:
     """Full overlap pipeline: study_locus -> study_locus_overlap rows
-    (reference: study_locus.py:821-858)."""
+    (reference: study_locus.py:821-858).
+
+    The ``tags`` and peak-pair persists stay even over a checkpointed
+    input: the cached relations' measured sizes are what let the align
+    joins broadcast. On the ``perfbench`` coloc workload (4-core host,
+    two runs each), dropping both raised the pass's shuffled bytes from
+    2.36 to 3.27 MB (+39 %) and swapping them for ``localCheckpoint``
+    to 3.20 MB (+36 %). Neither is ever unpersisted, so cached blocks
+    pile up across calls in a long-lived session; that leak is still
+    open.
+    """
     tags = explode_locus_tags(study_locus).persist()
     peaks = overlapping_peaks(tags, intra_study_overlap)
     return align_overlapping_tags(tags, peaks)

@@ -6,21 +6,134 @@
     statistics → ABF fine-mapping posteriors → credible-set flags →
     find_overlaps → eCAVIAR + COLOC → colocalisation table
 
-Everything below is one lazy logical plan per output; Catalyst
-plans the whole flow (pushdown through every stage, AQE at runtime).
+Both sources go through the upstream chain (clumping to credible
+sets) as one union, so each upstream operator plans and runs once.
+The plan is cut once, at the credible-set study-locus table, with a
+lazy ``localCheckpoint``: ``find_overlaps`` and the two methods are
+planned over that small leaf instead of re-analysing the whole
+upstream plan at every DataFrame call. Under AQE the cut runs the
+upstream shuffle stages when ``coloc_pipeline`` is called; the rest
+stays lazy until the caller's action. As with the clumping
+checkpoint, a lost executor's blocks cannot be recomputed from
+lineage: the next action fails instead.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from genetics_spark_coloc_spark.functions.pvalue import pvalue_pair_lte
 from genetics_spark_coloc_spark.operators import coloc as coloc_ops
 from genetics_spark_coloc_spark.operators import overlaps as overlap_ops
 from genetics_spark_coloc_spark.operators.clumping import window_based_clumping
 from genetics_spark_coloc_spark.operators.credible_sets import annotate_credible_sets
 from genetics_spark_coloc_spark.operators.finemapping import finemap_abf
 from genetics_spark_coloc_spark.operators.locus_statistics import annotate_locus_statistics
+
+# the sumstats columns clumping and fine-mapping read
+_SUMSTATS_COLS = [
+    "studyId", "variantId", "chromosome", "position",
+    "pValueMantissa", "pValueExponent", "beta", "standardError",
+]
+
+
+def _study_locus_id(study_id: str):
+    return F.md5(F.concat_ws("|", study_id, "variantId"))
+
+
+def _clump_and_finemap(
+    sources: dict[str, tuple[DataFrame, float]], distance: int
+) -> DataFrame:
+    """One clump-and-fine-map pass over ``{studyType: (sumstats,
+    significance)}`` sources unioned, each row filtered at its own
+    source's cut-off.
+
+    A study is (studyType, studyId): the clumping windows, the locus
+    join and the fine-mapping window run on ``studyId`` qualified with
+    the study type, so an id present in two sources stays two studies.
+    ``studyId`` and ``studyLocusId`` are restored from the source's own
+    id at the end.
+    """
+    sumstats = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            ss.select(*[c for c in _SUMSTATS_COLS if c in ss.columns])
+            .withColumnRenamed("studyId", "sourceStudyId")
+            .withColumn("studyType", F.lit(study_type))
+            for study_type, (ss, _) in sources.items()
+        ],
+    ).withColumn("studyId", F.concat_ws(":", "studyType", "sourceStudyId"))
+    significant = reduce(
+        lambda a, b: a | b,
+        [
+            (F.col("studyType") == study_type)
+            & pvalue_pair_lte(F.col("pValueMantissa"), F.col("pValueExponent"), cutoff)
+            for study_type, (_, cutoff) in sources.items()
+        ],
+    )
+    # the per-row cut-off has already filtered; the loosest one keeps
+    # clumping's own significance filter a no-op
+    leads = window_based_clumping(
+        sumstats.filter(significant),
+        distance,
+        max(cutoff for _, cutoff in sources.values()),
+    )
+    loci = leads.select(
+        _study_locus_id("studyId").alias("studyLocusId"),
+        # a lead without a studyId collects no tags, as an unqualified
+        # null key never joins
+        F.when(F.col("sourceStudyId").isNotNull(), F.col("studyId")).alias("studyId"),
+        "sourceStudyId",
+        "studyType",
+        "variantId",
+        "chromosome",
+        "position",
+    )
+    collected = annotate_locus_statistics(loci, sumstats, distance)
+    # posterior per tag within each locus (needs standardError; fall
+    # back to |beta|/|z|-free default when the source lacks SE)
+    lead_cols = ["studyLocusId", "sourceStudyId", "studyType", "variantId", "chromosome", "position"]
+    tags = collected.select(*lead_cols, F.explode_outer("locus").alias("tag"))
+    has_se = "standardError" in sumstats.columns
+    se = F.coalesce(F.col("tag.standardError"), F.lit(0.1)) if has_se else F.lit(0.1)
+    finemapped = finemap_abf(
+        tags.select(
+            *lead_cols,
+            F.col("tag.variantId").alias("tagVariantId"),
+            F.col("tag.pValueMantissa").alias("tagPValueMantissa"),
+            F.col("tag.pValueExponent").alias("tagPValueExponent"),
+            F.coalesce(F.col("tag.beta"), F.lit(0.0)).alias("beta"),
+            se.alias("standardError"),
+        ),
+        locus_col="studyLocusId",
+    )
+    rebuilt = finemapped.groupBy(*lead_cols).agg(
+        F.collect_list(
+            F.struct(
+                F.col("tagVariantId").alias("variantId"),
+                F.col("posteriorProbability"),
+                F.col("logABF").alias("logBF"),
+                F.col("beta"),
+                F.col("tagPValueMantissa").alias("pValueMantissa"),
+                F.col("tagPValueExponent").alias("pValueExponent"),
+            )
+        ).alias("locus")
+    )
+    return annotate_credible_sets(
+        rebuilt.select(
+            _study_locus_id("sourceStudyId").alias("studyLocusId"),
+            F.col("sourceStudyId").alias("studyId"),
+            "variantId",
+            "chromosome",
+            "position",
+            "locus",
+            "studyType",
+            F.concat_ws(":", "chromosome", F.col("position").cast("string")).alias("region"),
+        )
+    )
 
 
 def clump_and_finemap(
@@ -35,54 +148,7 @@ def clump_and_finemap(
     via the binned range join; tag posteriors via Wakefield ABF;
     95/99% credible-set flags annotated.
     """
-    leads = window_based_clumping(sumstats, distance, gwas_significance)
-    loci = leads.select(
-        F.md5(F.concat_ws("|", "studyId", "variantId")).alias("studyLocusId"),
-        "studyId",
-        "variantId",
-        "chromosome",
-        "position",
-    )
-    collected = annotate_locus_statistics(loci, sumstats, distance)
-    # posterior per tag within each locus (needs standardError; fall
-    # back to |beta|/|z|-free default when the source lacks SE)
-    tags = collected.select(
-        "studyLocusId", "studyId", "variantId", "chromosome", "position",
-        F.explode_outer("locus").alias("tag"),
-    )
-    has_se = "standardError" in sumstats.columns
-    se = F.coalesce(F.col("tag.standardError"), F.lit(0.1)) if has_se else F.lit(0.1)
-    finemapped = finemap_abf(
-        tags.select(
-            "studyLocusId", "studyId", "variantId", "chromosome", "position",
-            F.col("tag.variantId").alias("tagVariantId"),
-            F.col("tag.pValueMantissa").alias("tagPValueMantissa"),
-            F.col("tag.pValueExponent").alias("tagPValueExponent"),
-            F.coalesce(F.col("tag.beta"), F.lit(0.0)).alias("beta"),
-            se.alias("standardError"),
-        ),
-        locus_col="studyLocusId",
-    )
-    rebuilt = finemapped.groupBy(
-        "studyLocusId", "studyId", "variantId", "chromosome", "position"
-    ).agg(
-        F.collect_list(
-            F.struct(
-                F.col("tagVariantId").alias("variantId"),
-                F.col("posteriorProbability"),
-                F.col("logABF").alias("logBF"),
-                F.col("beta"),
-                F.col("tagPValueMantissa").alias("pValueMantissa"),
-                F.col("tagPValueExponent").alias("pValueExponent"),
-            )
-        ).alias("locus")
-    )
-    return annotate_credible_sets(
-        rebuilt.withColumn("studyType", F.lit(study_type)).withColumn(
-            "region",
-            F.concat_ws(":", "chromosome", F.col("position").cast("string")),
-        )
-    )
+    return _clump_and_finemap({study_type: (sumstats, gwas_significance)}, distance)
 
 
 def coloc_pipeline(
@@ -93,10 +159,19 @@ def coloc_pipeline(
     qtl_significance: float = 1e-5,
 ) -> DataFrame:
     """Full colocalisation: two sumstats sources in, one
-    colocalisation table out (eCAVIAR + COLOC, unioned)."""
-    gwas_loci = clump_and_finemap(gwas_sumstats, distance, gwas_significance, "gwas")
-    qtl_loci = clump_and_finemap(qtl_sumstats, distance, qtl_significance, "eqtl")
-    study_locus = gwas_loci.unionByName(qtl_loci)
+    colocalisation table out (eCAVIAR + COLOC, unioned).
+
+    Equal to ``clump_and_finemap`` on each source, unioned, then
+    ``find_overlaps`` and both methods; the sources share one upstream
+    pass and the plan is cut at the study-locus table (module doc).
+    """
+    study_locus = _clump_and_finemap(
+        {
+            "gwas": (gwas_sumstats, gwas_significance),
+            "eqtl": (qtl_sumstats, qtl_significance),
+        },
+        distance,
+    ).localCheckpoint(eager=False)
     overlaps = overlap_ops.find_overlaps(study_locus)
     ecav = coloc_ops.ecaviar(overlaps)
     cl = coloc_ops.coloc(overlaps)

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from genetics_spark_coloc_spark.operators import coloc as coloc_ops
+from genetics_spark_coloc_spark.operators.overlaps import find_overlaps
 from genetics_spark_coloc_spark.pipelines import clump_and_finemap, coloc_pipeline
 
 SCHEMA = (
@@ -91,3 +93,45 @@ def test_coloc_pipeline_end_to_end(spark):
     coloc_rows = [r for r in rows if r["colocalisationMethod"] == "COLOC"]
     if coloc_rows:  # COLOC surviving its overlap-size filter
         assert coloc_rows[0]["h4"] > 0.5
+
+
+def _per_source_composition(gwas, qtl, distance):
+    """coloc_pipeline spelled out one source at a time."""
+    study_locus = clump_and_finemap(gwas, distance, 1e-8, "gwas").unionByName(
+        clump_and_finemap(qtl, distance, 1e-5, "eqtl")
+    )
+    overlaps = find_overlaps(study_locus)
+    return coloc_ops.ecaviar(overlaps).unionByName(
+        coloc_ops.coloc(overlaps), allowMissingColumns=True
+    )
+
+
+# (gwas rows, qtl rows): the end-to-end fixture above, and one where
+# both sources carry study "S1" with leads 2-3 kb apart, so merging the
+# two studies would clump one lead away and pool their locus tags
+COMPOSITION_FIXTURES = {
+    "distinct_study_ids": (
+        _sumstats("GWAS1", "1", 1_000_000, 8, 3, -20),
+        _sumstats("QTL1", "1", 1_000_000, 8, 3, -12),
+    ),
+    "shared_study_id": (
+        _sumstats("S1", "1", 1_000_000, 8, 3, -20)
+        + _sumstats("S1", "2", 2_000_000, 6, 1, -14),
+        _sumstats("S1", "1", 1_000_000, 8, 5, -12)
+        + _sumstats("S1", "2", 2_000_000, 6, 4, -11),
+    ),
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(COMPOSITION_FIXTURES))
+def test_coloc_pipeline_equals_per_source_composition(spark, fixture):
+    gwas_rows, qtl_rows = COMPOSITION_FIXTURES[fixture]
+    gwas = spark.createDataFrame(gwas_rows, SCHEMA)
+    qtl = spark.createDataFrame(qtl_rows, SCHEMA)
+    got = coloc_pipeline(gwas, qtl, distance=100_000)
+    want = _per_source_composition(gwas, qtl, distance=100_000)
+    assert got.columns == want.columns
+    got_rows = sorted(got.collect(), key=repr)
+    want_rows = sorted(want.collect(), key=repr)
+    assert len(got_rows) >= 2
+    assert got_rows == want_rows

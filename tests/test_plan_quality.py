@@ -125,6 +125,34 @@ def test_coloc_methods_plan_no_join(spark, tmp_path, method):
     assert "Join" not in plan, plan
 
 
+def test_coloc_pipeline_plan_is_cut_at_study_locus(spark, tmp_path):
+    """coloc_pipeline cuts its plan at the credible-set study-locus
+    table: the overlaps and both methods are planned over a checkpoint
+    leaf, so the optimised plan holds none of the upstream clumping and
+    fine-mapping windows and no parquet scan of either source."""
+    from genetics_spark_coloc_spark.pipelines import coloc_pipeline
+
+    rows = [
+        ("S1", f"1_{1_000_000 + i * 1000}_A_C", "1", 1_000_000 + i * 1000,
+         0.5 if i == 3 else 0.05, 0.05, 1.0, -20 if i == 3 else -9)
+        for i in range(8)
+    ]
+    schema = (
+        "studyId string, variantId string, chromosome string, position int, "
+        "beta double, standardError double, pValueMantissa float, pValueExponent int"
+    )
+    for side in ("gwas", "qtl"):
+        spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / side))
+    df = coloc_pipeline(
+        spark.read.parquet(str(tmp_path / "gwas")),
+        spark.read.parquet(str(tmp_path / "qtl")),
+        distance=100_000,
+    )
+    plan = optimized_plan(df)
+    assert "Window [" not in plan
+    assert "FileScan parquet" not in plan
+
+
 def test_interval_and_ivf_joins_stay_hash_shaped(spark):
     """Binned interval join (explained_by_finemap) and the IVF
     cluster join must never degenerate to CartesianProduct; the

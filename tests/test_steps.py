@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 from genetics_spark_coloc_spark.queries import _sumstats, _tags
 from genetics_spark_coloc_spark.steps import STEPS, coerce_param, run_step
 
+# the steps that ingest the reference's raw sample files skip where
+# that checkout is absent, under the realism tests' own guard
+from test_reference_samples import DATA as REFERENCE_DATA
+from test_reference_samples import pytestmark as needs_reference_data
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -384,8 +389,9 @@ def test_run_gwas_catalog_top_hits(spark, tmp_path):
         ]
 
 
+@needs_reference_data
 def test_run_biosample_index(spark, tmp_path):
-    data = "/root/reference/tests/gentropy/data_samples"
+    data = REFERENCE_DATA
     out = str(tmp_path / "biosamples.parquet")
     df = run_step(
         spark,
@@ -406,8 +412,9 @@ def test_run_biosample_index(spark, tmp_path):
     assert not any("http" in i for i in ids)
 
 
+@needs_reference_data
 def test_run_finngen_finemapping_ingestion(spark, tmp_path):
-    data = "/root/reference/tests/gentropy/data_samples"
+    data = REFERENCE_DATA
     out = str(tmp_path / "finngen_cs.parquet")
     df = run_step(
         spark,
@@ -426,8 +433,9 @@ def test_run_finngen_finemapping_ingestion(spark, tmp_path):
         assert r.locus
 
 
+@needs_reference_data
 def test_run_finngen_studies(spark, tmp_path):
-    data = "/root/reference/tests/gentropy/data_samples"
+    data = REFERENCE_DATA
     out = str(tmp_path / "finngen_studies.parquet")
     df = run_step(
         spark,
@@ -444,8 +452,9 @@ def test_run_finngen_studies(spark, tmp_path):
         assert r.ldPopulationStructure is not None
 
 
+@needs_reference_data
 def test_run_gwas_catalog_study_index(spark, tmp_path):
-    data = "/root/reference/tests/gentropy/data_samples"
+    data = REFERENCE_DATA
     out = str(tmp_path / "gcat_studies.parquet")
     df = run_step(
         spark,
