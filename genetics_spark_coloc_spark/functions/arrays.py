@@ -94,25 +94,6 @@ def order_array_of_structs_by_field(arr: Column, field: str) -> Column:
     )
 
 
-def order_array_of_structs_by_two_fields(arr: Column, primary: str, secondary: str) -> Column:
-    """Sort array<struct> by primary DESC then secondary DESC, nulls
-    last (reference: common/spark_helpers.py:412-448)."""
-    def cmp(l: Column, r: Column) -> Column:  # noqa: E741
-        return (
-            F.when(l[primary].isNull() & r[primary].isNotNull(), 1)
-            .when(r[primary].isNull() & l[primary].isNotNull(), -1)
-            .when(l[primary] > r[primary], -1)
-            .when(l[primary] < r[primary], 1)
-            .when(l[secondary].isNull() & r[secondary].isNotNull(), 1)
-            .when(r[secondary].isNull() & l[secondary].isNotNull(), -1)
-            .when(l[secondary] > r[secondary], -1)
-            .when(l[secondary] < r[secondary], 1)
-            .otherwise(0)
-        ).cast("integer")
-
-    return F.array_sort(arr, cmp)
-
-
 def cumulative_sum_flags(
     sorted_values: Column, threshold: float
 ) -> Column:

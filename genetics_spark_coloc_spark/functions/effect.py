@@ -9,11 +9,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def odds_ratio_to_beta(odds_ratio: Column) -> Column:
-    """beta = ln(OR) (reference: utils.py:81-98)."""
-    return F.log(odds_ratio)
-
-
 def ci_to_standard_error(ci_lower: Column, ci_upper: Column, is_odds_ratio: Column | None = None) -> Column:
     """SE from a 95% confidence interval: (upper - lower) / 3.92.
 
@@ -26,8 +21,3 @@ def ci_to_standard_error(ci_lower: Column, ci_upper: Column, is_odds_ratio: Colu
         lower = F.when(is_odds_ratio, F.log(ci_lower)).otherwise(ci_lower)
         upper = F.when(is_odds_ratio, F.log(ci_upper)).otherwise(ci_upper)
     return (upper - lower) / F.lit(3.92)
-
-
-def se_from_beta_pvalue(beta: Column, zscore: Column) -> Column:
-    """SE = |beta / z| when only beta and p are available."""
-    return F.abs(beta / zscore)

@@ -70,18 +70,6 @@ def get_record_with_maximum_value(
     )
 
 
-def get_record_with_minimum_value(
-    df: DataFrame, grouping_cols: list[str], sorting_col: str
-) -> DataFrame:
-    """Top-1 row per group by ASC sort column."""
-    w = Window.partitionBy(*grouping_cols).orderBy(F.col(sorting_col).asc_nulls_last())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def declared_single_partition(col: Column) -> Column:
     """A constant-zero partition key that SURVIVES constant folding,
     for windows whose single-partition execution is the intended

@@ -2,19 +2,13 @@
 
 Reference anchors: sanity filter (src/gentropy/dataset/
 summary_statistics.py:143-172), genomic-region exclusion
-(summary_statistics.py:117-141, common/genomic_region.py:6-103),
-MHC flagging (dataset/study_locus.py:1098-1153).
+(summary_statistics.py:117-141, common/genomic_region.py:6-103).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# GRCh38 MHC region (reference: common/genomic_region.py knowns)
-MHC_CHROMOSOME = "6"
-MHC_START = 25_726_063
-MHC_END = 33_400_000
 
 
 def sanity_filter(sumstats: DataFrame) -> DataFrame:
@@ -49,22 +43,4 @@ def exclude_region(
     """Drop rows inside a genomic region."""
     return df.filter(
         ~in_region(F.col("chromosome"), F.col("position"), region_chrom, start, end)
-    )
-
-
-def flag_mhc(df: DataFrame, flag: str = "MHC region") -> DataFrame:
-    """Append the MHC QC flag to loci inside the MHC region
-    (reference: study_locus.py:1098-1153)."""
-    inside = in_region(
-        F.col("chromosome"), F.col("position"), MHC_CHROMOSOME, MHC_START, MHC_END
-    )
-    return df.withColumn(
-        "qualityControls",
-        F.when(
-            inside,
-            F.array_union(
-                F.coalesce(F.col("qualityControls"), F.array().cast("array<string>")),
-                F.array(F.lit(flag)),
-            ),
-        ).otherwise(F.col("qualityControls")),
     )

@@ -76,7 +76,6 @@ def connected_components(
     dst_col: str = "rightId",
     num_rounds: int = 8,
     until_converged: bool = False,
-    raise_on_unconverged: bool = True,
     check_every: int = 1,
     stats_out: "dict | None" = None,
     unroll: int = 1,
@@ -177,9 +176,7 @@ def connected_components(
     When ``until_converged`` is off, a single cheap final check
     verifies no edge still connects two different labels and raises
     RuntimeError if the fixed round budget was too small — an
-    unconverged labeling would silently split true clusters. Pass
-    ``raise_on_unconverged=False`` only when a caller checks (or
-    tolerates) convergence itself.
+    unconverged labeling would silently split true clusters.
 
     Pass a dict as ``stats_out`` to receive ``{"rounds": <checked
     segments executed>, "propagations": <total propagations run>,
@@ -432,7 +429,7 @@ def connected_components(
         # the superseded-round sweep runs AFTER the convergence check
         if cleanup:
             _drop_superseded(pinned_ids)
-    if not converged and raise_on_unconverged:
+    if not converged:
         # budget exhausted (or checks disabled): one final exact check
         if _bridging(labels) > 0:
             raise RuntimeError(

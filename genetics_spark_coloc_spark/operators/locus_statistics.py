@@ -36,15 +36,14 @@ def annotate_locus_statistics(
     study_locus: DataFrame,
     sumstats: DataFrame,
     distance: int,
-    broadcast_loci: bool = True,
 ) -> DataFrame:
     """Attach a ``locus`` array of sumstat rows within ±``distance`` of
     each lead position.
 
-    ``broadcast_loci`` should stay True while the clumped loci are
-    small relative to sumstats (the normal regime).
+    The clumped loci (three bins per lead) broadcast onto the sumstats
+    scan: they are small relative to sumstats in the normal regime.
     """
-    loci = (
+    loci = F.broadcast(
         study_locus.select(
             F.col("studyLocusId").alias("lc_studyLocusId"),
             F.col("studyId").alias("lc_studyId"),
@@ -61,8 +60,6 @@ def annotate_locus_statistics(
             ),
         )
     )
-    if broadcast_loci:
-        loci = F.broadcast(loci)
 
     ss = sumstats.alias("ss").withColumn(
         "ss_bin", F.floor(F.col("position") / distance).cast("int")

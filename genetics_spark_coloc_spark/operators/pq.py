@@ -726,80 +726,18 @@ def exact_l2_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact squared-L2 top-k per query — the brute-force ground
-    truth the ``ivfpq_index mode=certify`` step scores recall
-    against (IVF-PQ's ADC metric is L2, so its exact counterpart is
-    this, not cosine). Broadcast query side, one zip_with fold per
-    pair, distances 6dp-rounded before ranking, ties toward the
-    smaller neighborId, self-matches excluded — the L2 twin of
-    ``similarity.cosine_topk``. Output: (queryId, neighborId, l2Dist,
-    rank). Scale shape: one broadcast nested-loop over the corpus
-    scan (|Q| is a certification sample, not a workload), one
-    window top-k."""
-    # null/mismatched-dim vectors yield a NULL fold (zip_with pads the
-    # shorter array with nulls) — under ASC ordering Spark sorts nulls
-    # FIRST, which would rank a junk row as everyone's nearest
-    # neighbour; drop invalid rows up front and order nulls last as
-    # belt-and-braces (cosine_topk is safe only by accident: its DESC
-    # ordering happens to put nulls last)
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("queryId"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    )
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighborId"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on=F.col("neighborId") != F.col("queryId"))
-        .withColumn(
-            "l2Dist",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qvec"),
-                        F.col("cvec"),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-        .drop("qvec", "cvec")
-    )
-    w = Window.partitionBy("queryId").orderBy(
-        F.col("l2Dist").asc_nulls_last(), F.col("neighborId").asc()
-    )
-    return (
-        # dimension-mismatched corpus rows survive the isNotNull vector
-        # filter but fold to a NULL distance; nulls-last only hides
-        # them while a query has >= k valid neighbours — when it has
-        # fewer, the junk row would still surface with a null l2Dist.
-        # Drop them outright (the BLAS twin and cosine_topk already do).
-        scored.filter(F.col("l2Dist").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("queryId", "neighborId", "l2Dist", "rank")
-    )
+    truth the ``ivfpq_index mode=certify`` step scores recall against
+    (IVF-PQ's ADC metric is L2, so its exact counterpart is this, not
+    cosine), and the registry's ``l2_topk``. The L2 counterpart of
+    ``similarity.cosine_topk``: distances 6dp half-away rounded
+    before ranking, ties toward the smaller neighborId, self-matches
+    and null or wrong-dimension vectors excluded. Output: (queryId,
+    neighborId, l2Dist, rank).
 
-
-def exact_l2_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact squared-L2 top-k, BLAS edition — same contract as
-    :func:`exact_l2_topk` (6dp half-away rounding before ranking,
-    ties toward the smaller neighborId, self-matches and junk vectors
-    excluded) built for the ``ivfpq_index mode=certify`` ground-truth
-    scan: queries collect to a driver matrix, each Arrow batch is one
+    Queries collect to a driver matrix, each Arrow batch is one
     expanded-form distance product (``_sq_dist``), only the per-batch
-    top-k per query is emitted (the pq_adc_topk device), a closing
-    window ranks exactly. The column twin remains the oracle-checked
-    registry form (`l2_topk`)."""
+    top-k per query is emitted (the pq_adc_topk device), and a
+    closing window ranks exactly."""
     import numpy as np
     import pandas as pd
 
@@ -925,7 +863,7 @@ def sq8_topk(
     Emits (queryId, neighborId, approxDot, rank <= k), excluding
     self-pairs.
 
-    r14: scoring runs as a batched BLAS kernel (the cosine_topk_blas
+    r14: scoring runs as a batched BLAS kernel (the cosine_topk
     device; guide §4.2). The old form was a broadcast pair join whose
     projection evaluated the interpreted zip_with/aggregate dot fold
     per (corpus row × query) pair — |corpus|·|Q| interpreted O(dim)

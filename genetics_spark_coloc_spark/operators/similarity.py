@@ -1,15 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: broadcast the query set, JVM-side dot
-  product via zip_with/aggregate folds (double accumulation,
-  left-to-right — reproducible), ranking window per query.
+- exact cosine top-k (:func:`cosine_topk`): the small query set
+  rides the task closure as a driver matrix, each Arrow batch of the
+  corpus is one BLAS product, ranking window per query.
 - LSH-bucketed variant (scale path): random-hyperplane signs derived
   deterministically from md5 of (planeIdx, dim) so the oracle can
   reproduce the buckets; candidates only join within a bucket.
 
-At 100 TB the broadcast side is the small query set; the corpus scan
-stays partition-local until the final per-query top-k shuffle (k rows
-per partition per query after partial ranking).
+At 100 TB the query set is the small side; the corpus scan stays
+partition-local until the final per-query top-k shuffle (k rows per
+batch per query after partial ranking).
 """
 
 from __future__ import annotations
@@ -112,74 +112,24 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
-    Output: (queryId, neighborId, cosineSim) with self-matches
-    excluded; ties broken by neighborId (deterministic). The
-    similarity is rounded to 6dp BEFORE ranking so rank order is
-    reproducible across engines.
+    Output: (queryId, neighborId, cosineSim, rank) with self-matches
+    excluded and ties broken toward the smaller neighborId. The
+    similarity is 6dp half-away rounded BEFORE ranking, so rank order
+    is reproducible across engines.
 
-    Null and zero-norm vectors are excluded on BOTH sides: a
-    zero-norm corpus row divides 0/0 into NaN, and Spark orders NaN
+    Built for a small query set: the queries collect to a driver
+    matrix that rides the task closure, and each Arrow batch of the
+    corpus is ONE (batch × dim) @ (dim × |Q|) product emitting only
+    the per-batch top-k per query — a correct prefix of the final
+    total order, so the closing exact rank shuffles
+    O(k·batches·|Q|) rows, never corpus×|Q| (the pq_adc_topk
+    device). ~50× the throughput of an interpreted per-pair
+    zip_with fold (measured in BASELINE.md).
+
+    Null, wrong-dimension and zero-norm vectors are dropped on both
+    sides: a zero-norm row divides 0/0 into NaN, and Spark orders NaN
     ABOVE every number — under the DESC rank a single junk row would
-    silently become every query's top-1 neighbour (r13; the L2 twin
-    had the mirror-image bug with nulls-first ASC ordering).
-    """
-    # norms are computed ONCE per row before the pair join — the pair
-    # expression is a single dot-product fold, not three (same float
-    # result: sqrt(dot(v,v)) is the identical expression either way)
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("queryId"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qnorm"),
-    ).filter(F.col("qnorm") > 0.0)
-    c = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("neighborId"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("cnorm"),
-    ).filter(F.col("cnorm") > 0.0)
-    scored = (
-        c.join(F.broadcast(q), on=F.col("neighborId") != F.col("queryId"))
-        .withColumn(
-            "cosineSim",
-            F.round(
-                dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")), 6
-            ),
-        )
-        .drop("qvec", "cvec", "qnorm", "cnorm")
-        # dimension-mismatched pairs fold to NULL (zip_with pads with
-        # nulls) — drop them instead of emitting null-sim rows
-        .filter(F.col("cosineSim").isNotNull())
-    )
-    w = Window.partitionBy("queryId").orderBy(
-        F.col("cosineSim").desc(), F.col("neighborId").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("queryId", "neighborId", "cosineSim", "rank")
-    )
-
-
-def cosine_topk_blas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k, BLAS edition — same contract as
-    :func:`cosine_topk` (6dp half-away rounding BEFORE ranking, ties
-    toward the smaller neighborId, self-matches excluded) but built
-    for the certification path where |queries| is a small sample: the
-    queries collect to a driver matrix that rides the task closure,
-    and each Arrow batch of the corpus is ONE (batch × dim) @
-    (dim × |Q|) product emitting only the per-batch top-k per query —
-    a correct prefix of the final total order, so the closing exact
-    rank shuffles O(k·batches·|Q|) rows, never corpus×|Q| (the
-    pq_adc_topk device). ~50× the zip_with column fold's throughput
-    on the dominant exact-ground-truth scan of ``mode=certify``
-    (measured in BASELINE.md). Zero-norm/junk vectors are dropped by
-    the kernel's validity check; the column twin remains the
-    oracle-checked registry form."""
+    otherwise become every query's top-1 neighbour."""
     import numpy as np
     import pandas as pd
 
@@ -743,8 +693,8 @@ def ivf_topk(
         # a zero-norm member divides 0/0 into NaN, and Spark orders
         # NaN ABOVE every number — one junk row in a probed list
         # would become the top-1 of every query probing it (r13, the
-        # cosine_topk fix's IVF twin); dimension mismatches fold to
-        # NULL — drop both at the ranking boundary
+        # same exclusion cosine_topk makes); dimension mismatches fold
+        # to NULL — drop both at the ranking boundary
         .filter(
             F.col("cosineSim").isNotNull() & ~F.isnan(F.col("cosineSim"))
         )
@@ -794,51 +744,6 @@ def load_ivf_index(spark, path: str):
     members = spark.read.parquet(path)
     centroids = spark.read.parquet(os.path.join(path, "_centroids"))
     return members, centroids, meta
-
-
-def lsh_cosine_candidates(
-    corpus: DataFrame,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Bucket the corpus by single-band hyperplane LSH; candidate
-    pairs share a bucket. Spark's ReusedExchange serves the self-join
-    from one shuffle, so no persist (and no leaked cache) is needed.
-
-    NOTE: a single band caps key cardinality at 2^num_planes, so
-    per-bucket self-joins degenerate toward all-pairs on large
-    corpora — use ``lsh_cosine_candidates_banded`` at scale.
-    """
-    bucketed = corpus.select(
-        F.col(id_col).alias("docId"),
-        hyperplane_bucket(F.col(vec_col), num_planes).alias("bucket"),
-    )
-    l, r = bucketed.alias("l"), bucketed.alias("r")
-    return (
-        l.join(
-            r,
-            on=[F.col("l.bucket") == F.col("r.bucket"), F.col("l.docId") < F.col("r.docId")],
-        )
-        .select(
-            F.col("l.docId").alias("leftId"),
-            F.col("r.docId").alias("rightId"),
-            F.col("l.bucket").alias("bucket"),
-        )
-    )
-
-
-def hyperplane_band_hash(
-    vec: Column, band: int, planes_per_band: int = 8, dim: int = 64
-) -> Column:
-    """Per-band hyperplane hash: planes_per_band sign bits from the
-    globally-indexed plane family p = band·planes_per_band + r, so
-    every band draws independent hyperplanes from the same
-    md5-derived sign matrix the SQL oracle reproduces (band 0 ==
-    ``hyperplane_bucket``)."""
-    return _sign_bit_fold(
-        vec, planes_per_band, dim, plane_offset=band * planes_per_band
-    )
 
 
 def hyperplane_signature_bits_expr(
@@ -1328,9 +1233,10 @@ def mrl_funnel_topk(
     """Two-stage Matryoshka retrieval funnel (the pattern MRL
     truncation exists for): stage 1 shortlists ``shortlist_k``
     candidates per query by cosine over the first ``shortlist_dims``
-    coordinates (dims/d of the dot-product work), stage 2 re-ranks
-    ONLY the shortlist by full-dimension exact cosine. At corpus
-    scale stage 1 is the only pass that touches every vector; stage 2
+    coordinates (:func:`cosine_topk`'s BLAS scan at dims/d of the
+    dot-product work), stage 2 re-ranks ONLY the shortlist by
+    full-dimension exact cosine. At corpus scale stage 1 is the only
+    pass that touches every vector; stage 2
     joins the (|Q| x shortlist_k)-row shortlist back to the corpus on
     the id key — broadcast-sized by construction.
 
@@ -1360,31 +1266,10 @@ def mrl_funnel_topk(
         ),
         on="queryId",
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("qvec"),
-            F.col("cvec"),
-            lambda a, b: a.cast("double") * b.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _norm(c):
-        return F.sqrt(
-            F.aggregate(
-                c,
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-        )
-
     scored = cand.select(
         "queryId",
         "neighborId",
-        F.round(dot / (_norm(F.col("qvec")) * _norm(F.col("cvec"))), 6).alias(
-            "cosineSim"
-        ),
+        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cosineSim"),
     )
     w = Window.partitionBy("queryId").orderBy(
         F.col("cosineSim").desc(), F.col("neighborId").asc()
@@ -1477,9 +1362,8 @@ def choose_nprobe(
 
     Method: a deterministic hash-spread sample of ~``n_queries``
     corpus vectors becomes the query set; exact cosine on that sample
-    (the BLAS kernel :func:`cosine_topk_blas`, tuple-identical to
-    :func:`cosine_topk`) is the ground truth — one corpus scan, the
-    same trade FAISS makes training on a sample; then
+    (the BLAS kernel :func:`cosine_topk`) is the ground truth — one
+    corpus scan, the same trade FAISS makes training on a sample; then
     :func:`ivf_topk` recall is measured at doubling nprobe values
     (1, 2, 4, ...) until the target is met or ``max_nprobe``
     (default: the centroid count) is reached. The inverted lists are
@@ -1506,11 +1390,10 @@ def choose_nprobe(
     queries = corpus.filter(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(rate)) == 0
     ).localCheckpoint(eager=False)
-    # BLAS ground truth (r13): tuple-identical to cosine_topk (pinned
-    # by test) at ~50x the exact-scan throughput — the tuning cost is
-    # one corpus scan, not a corpus×sample column fold
+    # BLAS ground truth (r13): the tuning cost is one corpus scan,
+    # not a corpus×sample pair join
     truth = (
-        cosine_topk_blas(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
+        cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
         .select("queryId", "neighborId")
         .localCheckpoint(eager=False)
     )

@@ -116,7 +116,11 @@ def _clump_and_finemap(
                 F.col("tagVariantId").alias("variantId"),
                 F.col("posteriorProbability"),
                 F.col("logABF").alias("logBF"),
-                F.col("beta"),
+                # nullable, as annotate_credible_sets' optimised plan
+                # makes it: a non-null field (the coalesce above) sets
+                # the analysed schema apart from the optimised one, and
+                # a checkpoint of the output then drops its size estimate
+                F.when(F.col("beta").isNotNull(), F.col("beta")).alias("beta"),
                 F.col("tagPValueMantissa").alias("pValueMantissa"),
                 F.col("tagPValueExponent").alias("pValueExponent"),
             )

@@ -816,16 +816,13 @@ FROM documents
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for the first 10 vectors.
 
-    r15: runs :func:`similarity.cosine_topk_blas` — tuple-identical
-    to the interpreted column form by its r13 contract (6dp
-    half-away rounding before ranking, smaller-id tie-break,
-    junk-vector drops; pinned two-sided by
-    ``test_blas_topk_twins_match_column_forms``) and the SAME kernel
-    the production ``ivf_index mode=certify`` gate runs. The column
-    form stays exercised by that twin-parity unit test."""
+    Runs :func:`similarity.cosine_topk` (6dp half-away rounding
+    before ranking, smaller-id tie-break, junk-vector drops), the
+    same BLAS kernel the production ``ivf_index mode=certify`` gate
+    runs."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
-    return similarity.cosine_topk_blas(emb, queries_df, k=5)
+    return similarity.cosine_topk(emb, queries_df, k=5)
 
 
 SQL_COSINE_TOPK = """

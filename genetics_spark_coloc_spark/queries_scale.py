@@ -414,9 +414,9 @@ FROM ranked WHERE rank <= 3
 def q_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact squared-L2 top-5 per query (pq.exact_l2_topk) — the
     ground-truth kernel behind the ``ivfpq_index mode=certify``
-    staleness gate (r13), oracle-certified on its own: broadcast
-    query side, one zip_with fold per pair, 6dp-rounded before
-    ranking, ties toward the smaller neighborId.
+    staleness gate (r13), oracle-certified on its own: one BLAS
+    distance product per corpus batch against the query matrix,
+    6dp-rounded before ranking, ties toward the smaller neighborId.
 
     ORACLE-FIXTURE SHAPE, not the production certify path: the
     ``vec_id % 50 == 0`` query sample grows proportionally with the
@@ -425,19 +425,14 @@ def q_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``steps._sample_queries`` (fixed ``certify_queries`` sample), as
     ``steps._certify_ann_recall`` does.
 
-    r15: runs :func:`pq.exact_l2_topk_blas` — tuple-identical to the
-    interpreted column form by its r13 contract (6dp half-away
-    rounding before ranking, smaller-id tie-break, junk-vector
-    drops; pinned two-sided by
-    ``test_blas_topk_twins_match_column_forms``) and the SAME kernel
-    the production ``ivfpq_index mode=certify`` gate runs, so the
-    oracle now certifies the production shape. The column form stays
-    exercised by that twin-parity unit test."""
-    from genetics_spark_coloc_spark.operators.pq import exact_l2_topk_blas
+    The kernel is the SAME one the production ``ivfpq_index
+    mode=certify`` gate runs, so the oracle certifies the production
+    shape."""
+    from genetics_spark_coloc_spark.operators.pq import exact_l2_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return exact_l2_topk_blas(emb, queries, k=5)
+    return exact_l2_topk(emb, queries, k=5)
 
 
 SQL_L2_TOPK = """
@@ -479,15 +474,11 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``certify_queries`` sample and BLAS ground truth — see
     ``steps._sample_queries`` / ``steps._certify_ann_recall``.
 
-    r14: the exact side uses :func:`cosine_topk_blas` — tuple-
-    identical to the column form by its r13 contract (6dp half-away
-    rounding before ranking, smaller-id tie-break, junk-vector
-    drops), ~50× its per-pair throughput, and the same kernel the
-    production gate runs; the interpreted column form stays
-    exercised (and oracle-checked) by the dedicated ``cosine_topk``
-    registry query."""
+    The exact side uses :func:`cosine_topk`, the same BLAS kernel
+    the production gate runs (oracle-checked on its own by the
+    ``cosine_topk`` registry query)."""
     from genetics_spark_coloc_spark.operators.similarity import (
-        cosine_topk_blas,
+        cosine_topk,
         topk_recall,
     )
 
@@ -495,7 +486,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < 4)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     approx = ivf_topk(emb, queries, centroids, k=5, nprobe=1)
-    exact = cosine_topk_blas(emb, queries, k=5)
+    exact = cosine_topk(emb, queries, k=5)
     return topk_recall(approx, exact)
 
 

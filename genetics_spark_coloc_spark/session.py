@@ -99,50 +99,6 @@ def get_session(
     return builder.getOrCreate()
 
 
-def load_data(
-    spark: SparkSession,
-    path: str | list[str],
-    format: str = "parquet",  # noqa: A002
-    schema: str | None = None,
-    **options: str,
-) -> DataFrame:
-    """Generic reader (reference: common/session.py:132-157).
-
-    When no schema is given, infer and merge schemas across files so
-    heterogeneous ingestion directories load; with a schema, enforce
-    it so the scan prunes to exactly the declared columns.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-        options.setdefault("inferSchema", "false")
-    else:
-        options.setdefault("inferSchema", "true")
-        options.setdefault("mergeSchema", "true")
-    return reader.load(list(path) if isinstance(path, list) else path, format=format, **options)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "errorifexists",
-    output_partitions: int | None = None,
-    partition_by: list[str] | None = None,
-) -> None:
-    """Parquet sink (reference: colocalisation.py:73-75).
-
-    ``coalesce`` (not repartition) bounds output file count without a
-    shuffle; ``partition_by`` enables partition pruning for readers
-    (e.g. by chromosome at 100 TB).
-    """
-    if output_partitions is not None:
-        df = df.coalesce(output_partitions)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -80,12 +80,6 @@ def convert_odds_ratio_to_beta(
     return [b, se]
 
 
-def standard_error_from_ci(lower: Column, upper: Column) -> Column:
-    """SE = (upper - lower) / (2 * 1.96)
-    (reference: spark_helpers.py:761-789)."""
-    return (upper - lower) / (2 * 1.96)
-
-
 def variant_type(ref: Column, alt: Column) -> Column:
     """'snp_c' (complementary base swap) | 'snp_n' | 'indel'
     (reference: common/harmonise.py variant typing)."""
@@ -204,40 +198,6 @@ def read_finngen_sumstats(spark: SparkSession, path: str) -> DataFrame:
         .filter(F.col("beta") != 0)
         .repartitionByRange(30, "chromosome", "position")
         .sortWithinPartitions("chromosome", "position")
-    )
-
-
-EQTL_LBF_SCHEMA = T.StructType(
-    [
-        T.StructField("molecular_trait_id", T.StringType(), True),
-        T.StructField("region", T.StringType(), True),
-        T.StructField("variant", T.StringType(), True),
-        T.StructField("chromosome", T.StringType(), True),
-        T.StructField("position", T.IntegerType(), True),
-        T.StructField("lbf_variable1", T.DoubleType(), True),
-        T.StructField("lbf_variable2", T.DoubleType(), True),
-        T.StructField("lbf_variable3", T.DoubleType(), True),
-        T.StructField("lbf_variable4", T.DoubleType(), True),
-        T.StructField("lbf_variable5", T.DoubleType(), True),
-        T.StructField("lbf_variable6", T.DoubleType(), True),
-        T.StructField("lbf_variable7", T.DoubleType(), True),
-        T.StructField("lbf_variable8", T.DoubleType(), True),
-        T.StructField("lbf_variable9", T.DoubleType(), True),
-        T.StructField("lbf_variable10", T.DoubleType(), True),
-    ]
-)
-
-
-def read_eqtl_catalogue_lbf(spark: SparkSession, path: str) -> DataFrame:
-    """eQTL-Catalogue SuSiE log-Bayes-factor TSV(.gz) with explicit
-    input schema (reference: eqtl_catalogue/finemapping.py:262-325)."""
-    return (
-        spark.read.schema(EQTL_LBF_SCHEMA)
-        .option("delimiter", "\t")
-        .csv(path, header=True)
-        .withColumn(
-            "variantId", F.regexp_replace(F.col("variant"), "chr", "")
-        )
     )
 
 

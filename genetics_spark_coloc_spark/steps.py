@@ -894,7 +894,7 @@ def _run_ivf_index_unlocked(spark, inputs, output, p):
     from pyspark.sql import functions as F
 
     from genetics_spark_coloc_spark.operators.similarity import (
-        cosine_topk_blas,
+        cosine_topk,
         ivf_members,
         ivf_topk,
         load_ivf_index,
@@ -921,8 +921,8 @@ def _run_ivf_index_unlocked(spark, inputs, output, p):
         )
         # BLAS exact ground truth: one corpus scan, per-batch matmul
         # against the (tiny) query matrix — the certify wall is one
-        # extra corpus scan, not a corpus×sample column fold
-        exact = cosine_topk_blas(
+        # extra corpus scan, not a corpus×sample pair join
+        exact = cosine_topk(
             corpus,
             queries,
             k=p["certify_k"],
@@ -1063,7 +1063,7 @@ def _run_ivfpq_index_unlocked(spark, inputs, output, p):
 
     from genetics_spark_coloc_spark.operators.pq import (
         _collect_pq_codebooks,
-        exact_l2_topk_blas,
+        exact_l2_topk,
         ivfpq_index,
         ivfpq_topk,
         load_ivfpq_index,
@@ -1094,7 +1094,7 @@ def _run_ivfpq_index_unlocked(spark, inputs, output, p):
             id_col=p["id_col"],
             vec_col=p["vec_col"],
         )
-        exact = exact_l2_topk_blas(
+        exact = exact_l2_topk(
             corpus,
             queries,
             k=p["certify_k"],

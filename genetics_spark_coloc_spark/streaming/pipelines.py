@@ -50,33 +50,6 @@ def streaming_dedup_exact(
     )
 
 
-def streaming_windowed_stats(
-    events: DataFrame,
-    event_time_col: str,
-    value_col: str,
-    window: str = "1 minute",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Tumbling-window aggregation with late-data handling — the
-    streaming analogue of the batch per-study QC aggregates."""
-    return (
-        events.withWatermark(event_time_col, watermark)
-        .groupBy(F.window(F.col(event_time_col), window))
-        .agg(
-            F.count(F.lit(1)).alias("nRecords"),
-            F.round(F.avg(value_col), 6).alias("meanValue"),
-            F.round(F.stddev_samp(value_col), 6).alias("stdValue"),
-        )
-        .select(
-            F.col("window.start").alias("windowStart"),
-            F.col("window.end").alias("windowEnd"),
-            "nRecords",
-            "meanValue",
-            "stdValue",
-        )
-    )
-
-
 def streaming_running_user_stats(
     events: DataFrame,
     user_col: str = "user_id",

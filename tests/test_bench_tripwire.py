@@ -15,6 +15,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import find_regressions, merge_baseline
@@ -335,3 +337,29 @@ class TestDivergentKernels:
         assert out["q"]["verdict"] == "contention"
         assert "solo_sec_speed_adjusted" in out["q"]
         assert "adjudication_ratio_bounds" not in out["q"]
+
+
+def test_solo_baseline_entries_rescaled_to_prepass_host():
+    """Adjudication solo minima enter the baseline min-merge rescaled
+    to the PRE-PASS host state — a host that recovered mid-run must
+    not write an overly tight baseline."""
+    from bench import solo_baseline_entries
+
+    flags = {
+        # solo measured on a recovered (faster) host: speed-adjusted
+        # value is normalized to the stored-baseline host state
+        "q1": {"solo_sec": 1.0, "solo_sec_speed_adjusted": 1.2},
+        # no speed adjustment recorded -> falls back to raw solo
+        "q2": {"solo_sec": 2.0},
+        # error verdict -> contributes nothing
+        "q3": {"solo_sec": None},
+    }
+    ok = {"q1": 5.0, "q2": 1.5}
+    # pre-pass host ran 1.25x slower than the stored baseline
+    got = solo_baseline_entries(flags, ok, speed_ratio=1.25)
+    assert got["q1"] == pytest.approx(1.5)  # 1.2 * 1.25, < in-pass 5.0
+    assert got["q2"] == pytest.approx(1.5)  # min(in-pass 1.5, 2.0*1.25)
+    assert "q3" not in got
+    # raw solo (1.0) would have been tighter than the rescaled 1.5 —
+    # exactly the over-tight entry the fix prevents
+    assert got["q1"] > flags["q1"]["solo_sec"]

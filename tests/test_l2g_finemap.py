@@ -583,3 +583,24 @@ def test_registry_matrix_keeps_all_null_severity_groups(spark):
     # families correctly drop (no in-window evidence)
     assert names == ["vepMaximum", "vepMean"]
     assert all(r["featureValue"] is None for r in rows)
+
+
+def test_finemap_grouped_locus_size_guard(spark):
+    """One pathological locus materializes a p×p LD matrix inside a
+    single Python worker — the harness must fail loudly at the
+    documented bound BEFORE the kernel allocates."""
+    from genetics_spark_coloc_spark.operators.finemapping import (
+        finemap_grouped,
+    )
+
+    ss = spark.range(30).select(
+        F.lit("locus_huge").alias("studyLocusId"),
+        F.concat(F.lit("v"), F.col("id")).alias("variantId"),
+        (F.col("id") * 0.01).alias("beta"),
+        F.lit(0.1).alias("standardError"),
+    )
+    with pytest.raises(Exception, match="max_locus_variants"):
+        finemap_grouped(ss, max_locus_variants=10).collect()
+    # under the bound the same input fits normally
+    out = finemap_grouped(ss, max_locus_variants=30)
+    assert out.count() == 30

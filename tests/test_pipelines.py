@@ -58,6 +58,18 @@ def test_clump_and_finemap(spark):
         assert any(t["is95CredibleSet"] for t in tags)
 
 
+def test_clump_and_finemap_analysed_schema_equals_optimised(spark):
+    """``coloc_pipeline`` checkpoints this output; Spark keeps the
+    checkpoint leaf's size estimate (and logs no ``LogicalRDD``
+    warning) only when the analysed and optimised schemas match,
+    nullability included."""
+    df = spark.createDataFrame(
+        _sumstats("GWAS1", "1", 1_000_000, 8, 3, -20), SCHEMA
+    )
+    qe = clump_and_finemap(df, distance=100_000)._jdf.queryExecution()
+    assert qe.analyzed().schema().json() == qe.optimizedPlan().schema().json()
+
+
 def test_coloc_pipeline_end_to_end(spark):
     # GWAS and QTL share the locus at 1 Mb on chr1 (same variant grid)
     gwas = spark.createDataFrame(

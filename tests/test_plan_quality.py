@@ -185,8 +185,7 @@ def test_cosine_topk_is_a_kernel_scan(spark):
     sample rides the task closure, so the plan is ONE MapInPandas
     corpus scan feeding the closing exact rank window, with no pair
     join of any strategy left (the pre-r15 pin asserted the broadcast
-    pair join the interpreted column form planned; that form is now
-    exercised by test_blas_topk_twins_match_column_forms)."""
+    pair join of the interpreted column form, since deleted)."""
     from genetics_spark_coloc_spark.plans.inspect import physical_plan
 
     plan = physical_plan(QUERIES["cosine_topk"](spark, SF_DIR))

@@ -1,5 +1,10 @@
 """Product quantization: encode correctness vs brute force, ADC
-semantics, training shape, and null propagation."""
+semantics, training shape, and null propagation; the exact top-k
+kernels against a numpy brute force; and the ANN recall
+certification of the ``ivf_index``/``ivfpq_index`` steps."""
+
+import json
+import os
 
 import numpy as np
 import pytest
@@ -7,10 +12,15 @@ from pyspark.sql import functions as F
 
 from genetics_spark_coloc_spark.operators.pq import (
     codebooks_from_first_k,
+    exact_l2_topk,
     pq_adc_topk,
     pq_encode,
     train_pq_codebooks,
 )
+from test_steps import SF
+
+# the sf0.01 embeddings: 500 vectors, the oracle-check scale
+EMBEDDINGS = os.path.join(os.path.dirname(SF), "sf0.01", "embeddings.parquet")
 
 
 def _vecs(spark, n=40, dim=8, seed=7):
@@ -434,3 +444,291 @@ def test_choose_nprobe_hits_target_on_clustered_fixture(spark):
         df, cents, target_recall=1.0, k=5, n_queries=20, max_nprobe=2
     )
     assert np2 == 2 and curve2[-1]["nprobe"] == 2
+
+
+def _write(df, tmp_path, name):
+    p = str(tmp_path / name)
+    df.write.mode("overwrite").parquet(p)
+    return p
+
+
+def test_ivf_certify_detects_planted_drift(spark, tmp_path):
+    """The ANN staleness monitor. Build an IVF
+    index on a clean two-cluster corpus (certify: recall ~1), append
+    a batch that straddles the frozen Voronoi boundary (each vector's
+    true neighbours split across two lists, invisible to nprobe=1),
+    re-certify: recall drops, the drop is RECORDED in the
+    _recall_cert.json ledger inside the index, and a recall_floor
+    between the two certifications fails the step loudly."""
+    from genetics_spark_coloc_spark.steps import run_step
+
+    def vecs(rows):
+        return spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+
+    # two tight angular clusters around the frozen centroid directions
+    # (0.01 steps: cosine gaps survive the kernels' 6dp rounding)
+    train = [
+        (i, [1.0, 0.01 * i, 0.0, 0.0]) for i in range(30)
+    ] + [
+        (100 + i, [0.01 * i, 1.0, 0.0, 0.0]) for i in range(30)
+    ]
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
+    # drifted batch: TWIN PAIRS straddling the bisector of the two
+    # frozen centroids — each pair shares a third coordinate (which
+    # carries the neighbour distance) while a tiny ±0.01 second-coord
+    # nudge flips the coarse assignment, so every drifted vector's
+    # nearest true neighbour sits in the OTHER inverted list —
+    # invisible to nprobe=1 by construction (in 1-D a sign split
+    # keeps each side contiguous; the z-pairing is what interleaves)
+    drift = [
+        (
+            200 + i,
+            [
+                1.0,
+                1.0 + (0.01 if i % 2 else -0.01),
+                0.1 * (1 + i // 2),
+                0.0,
+            ],
+        )
+        for i in range(40)
+    ]
+
+    corpus_p = _write(vecs(train), tmp_path, "corpus.parquet")
+    cents_p = _write(vecs(cents), tmp_path, "cents.parquet")
+    out = str(tmp_path / "ivf")
+    run_step(
+        spark, "ivf_index", {"corpus": corpus_p, "centroids": cents_p}, out
+    )
+    run_step(
+        spark, "ivf_index", {"corpus": corpus_p, "centroids": cents_p}, out,
+        params={"mode": "certify", "certify_queries": 40, "certify_k": 5},
+    )
+    cert_path = os.path.join(out, "_recall_cert.json")
+    hist = json.load(open(cert_path))
+    assert len(hist) == 1 and hist[0]["passed"]
+    clean_recall = hist[0]["recall_at_k"]
+    assert clean_recall > 0.95
+
+    # the daily append, with a drifted crawl
+    delta_p = _write(vecs(drift), tmp_path, "delta.parquet")
+    run_step(
+        spark, "ivf_index", {"corpus": delta_p, "centroids": cents_p}, out,
+        params={"mode": "append"},
+    )
+    union_p = _write(vecs(train + drift), tmp_path, "union.parquet")
+    run_step(
+        spark, "ivf_index", {"corpus": union_p, "centroids": cents_p}, out,
+        params={"mode": "certify", "certify_queries": 40, "certify_k": 5},
+    )
+    hist = json.load(open(cert_path))
+    assert len(hist) == 2
+    drifted_recall = hist[1]["recall_at_k"]
+    assert drifted_recall < clean_recall - 0.05, (
+        f"planted drift not detected: {clean_recall} -> {drifted_recall}"
+    )
+    # a floor between the two certifications gates the pipeline loudly,
+    # and the failure message carries the measured remediation: with 2
+    # centroids, nprobe=2 is exhaustive, so the hint must name it
+    floor = (clean_recall + drifted_recall) / 2
+    with pytest.raises(
+        ValueError,
+        match=r"(?s)recall certification FAILED.*Remediation: nprobe=2",
+    ):
+        run_step(
+            spark, "ivf_index",
+            {"corpus": union_p, "centroids": cents_p}, out,
+            params={
+                "mode": "certify", "certify_queries": 40,
+                "certify_k": 5, "recall_floor": floor,
+            },
+        )
+    # the failing certification is still recorded (history = evidence)
+    hist = json.load(open(cert_path))
+    assert len(hist) == 3 and hist[2]["passed"] is False
+
+
+def test_ivfpq_certify_records_and_gates(spark, tmp_path):
+    """The IVF-PQ twin: certify scores the compressed search against
+    exact L2 over the raw corpus, appends to the ledger, and an
+    unreachable recall_floor fails loudly."""
+    from genetics_spark_coloc_spark.steps import run_step
+
+    def vecs(rows):
+        return spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+
+    corpus = [
+        (i, [float(10 * (i % 2)) + 0.01 * i, 0.02 * i, 1.0, 0.0])
+        for i in range(40)
+    ]
+    cents = [(0, [0.0, 0.0, 1.0, 0.0]), (1, [10.0, 0.0, 1.0, 0.0])]
+    corpus_p = _write(vecs(corpus), tmp_path, "pq_corpus.parquet")
+    cents_p = _write(vecs(cents), tmp_path, "pq_cents.parquet")
+    cbs_p = _write(
+        codebooks_from_first_k(vecs(corpus), m=2, k=8, dim=4),
+        tmp_path,
+        "pq_cbs.parquet",
+    )
+    out = str(tmp_path / "ivfpq")
+    ins = {"corpus": corpus_p, "centroids": cents_p, "codebooks": cbs_p}
+    run_step(spark, "ivfpq_index", ins, out)
+    run_step(
+        spark, "ivfpq_index", ins, out,
+        params={
+            "mode": "certify", "certify_queries": 16,
+            "certify_k": 3, "certify_nprobe": 2,
+        },
+    )
+    hist = json.load(open(os.path.join(out, "_recall_cert.json")))
+    assert len(hist) == 1 and 0.0 <= hist[0]["recall_at_k"] <= 1.0
+    assert hist[0]["n_queries"] == 16
+    with pytest.raises(ValueError, match="recall certification FAILED"):
+        run_step(
+            spark, "ivfpq_index", ins, out,
+            params={
+                "mode": "certify", "certify_queries": 16,
+                "certify_k": 3, "certify_nprobe": 2,
+                "recall_floor": 1.01,
+            },
+        )
+
+
+def brute_topk(ids, mat, query_ids, k, metric):
+    """Exact top-k in plain numpy, independent of the kernels: float64
+    scores (cosine, or squared L2 summed directly), self-matches
+    excluded, rounded half away from zero at 6dp before ranking, ties
+    toward the smaller id. Sorted (queryId, neighborId, score, rank)
+    tuples."""
+    ids = np.asarray(ids)
+    mat = np.asarray(mat, dtype=np.float64)
+    out = []
+    for qid in query_ids:
+        q = mat[ids == qid][0]
+        if metric == "cosine":
+            raw = (mat @ q) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
+            sign = -1.0  # best first = largest similarity
+        else:
+            raw = ((mat - q) ** 2).sum(axis=1)
+            sign = 1.0
+        score = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
+        ranked = sorted(
+            (sign * float(s), int(n)) for s, n in zip(score, ids) if n != qid
+        )
+        out += [
+            (int(qid), n, sign * s, rank)
+            for rank, (s, n) in enumerate(ranked[:k], start=1)
+        ]
+    return sorted(out)
+
+
+def test_exact_l2_topk_ignores_junk_vectors(spark):
+    """A null or dimension-mismatched embedding must never rank as a
+    nearest neighbour, whether the query has at least k valid
+    neighbours (k=2) or fewer (k=4)."""
+    rows = [
+        (1, [0.0, 0.0]),
+        (2, [1.0, 0.0]),
+        (3, [2.0, 0.0]),
+        (4, None),          # null embedding
+        (5, [9.0]),         # wrong dimension
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = exact_l2_topk(df, df.filter(F.col("vec_id") == 1), k=2).collect()
+    assert [(r["neighborId"], r["l2Dist"]) for r in out] == [
+        (2, 1.0),
+        (3, 4.0),
+    ]
+    # with k > the valid-neighbour count the junk rows must still be
+    # dropped, not surface with a null distance
+    out = exact_l2_topk(df, df.filter(F.col("vec_id") == 1), k=4).collect()
+    assert [(r["neighborId"], r["l2Dist"]) for r in out] == [
+        (2, 1.0),
+        (3, 4.0),
+    ]
+
+
+def test_exact_topk_kernels_match_numpy_brute_force(spark):
+    """The exact top-k kernels return exactly what a plain numpy brute
+    force returns (float64, 6dp half-away rounding before ranking,
+    smaller-id tie-break, self-matches excluded) on the bundled
+    embeddings table: full tuple equality, schema included."""
+    import pyarrow.parquet as pq
+
+    from genetics_spark_coloc_spark.operators.similarity import cosine_topk
+
+    table = pq.read_table(EMBEDDINGS, columns=["vec_id", "embedding"])
+    ids = table.column("vec_id").to_numpy()
+    mat = np.array(table.column("embedding").to_pylist(), dtype=np.float64)
+    query_ids = [int(i) for i in ids if i % 50 == 0]
+    emb = spark.read.parquet(EMBEDDINGS)
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    for fn, metric, score in (
+        (cosine_topk, "cosine", "cosineSim"),
+        (exact_l2_topk, "l2", "l2Dist"),
+    ):
+        got = fn(emb, queries, k=5)
+        assert got.schema.simpleString() == (
+            f"struct<queryId:bigint,neighborId:bigint,{score}:double,rank:int>"
+        )
+        assert sorted(tuple(r) for r in got.collect()) == brute_topk(
+            ids, mat, query_ids, 5, metric
+        ), metric
+    # junk rows never surface: null and wrong-dimension vectors in
+    # either metric, zero-norm ones in cosine (0/0 = NaN, and Spark
+    # orders NaN above every number: one junk row would otherwise
+    # become every query's top-1 under the DESC rank)
+    junk = spark.createDataFrame(
+        [
+            (1, [0.0, 1.0]),
+            (2, [1.0, 0.0]),
+            (3, None),
+            (4, [9.0]),
+            (5, [0.0, 0.0]),  # zero norm -> NaN cosine
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    got = cosine_topk(junk, junk.filter("vec_id = 1"), k=4).collect()
+    assert {r["neighborId"] for r in got} == {2}
+    got = exact_l2_topk(junk, junk.filter("vec_id = 1"), k=3).collect()
+    assert {r["neighborId"] for r in got} == {2, 5}  # zero-norm fine in L2
+
+    # IVF counterpart of the cosine exclusion: a zero-norm member in a
+    # probed list must never rank (it used to NaN-sort above every
+    # real neighbor)
+    from genetics_spark_coloc_spark.operators.similarity import ivf_topk
+
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = ivf_topk(
+        junk.filter("vec_id in (1, 2, 5)"),
+        junk.filter("vec_id = 1"),
+        cents,
+        k=3,
+        nprobe=2,
+    ).collect()
+    assert {r["neighborId"] for r in got} == {2}
+
+
+def test_topk_recall_counts_silent_queries_as_zero(spark):
+    """A query the approximate search returned NOTHING for is recall
+    0, not a dropped row — otherwise an index that loses whole queries
+    would look perfect on the ones it kept."""
+    from genetics_spark_coloc_spark.operators.similarity import topk_recall
+
+    exact = spark.createDataFrame(
+        [("q1", "a"), ("q1", "b"), ("q2", "c"), ("q2", "d")],
+        "queryId string, neighborId string",
+    )
+    approx = spark.createDataFrame(
+        [("q1", "a"), ("q1", "x")],  # q2 entirely absent
+        "queryId string, neighborId string",
+    )
+    row = topk_recall(approx, exact).collect()[0]
+    assert row["nQueries"] == 2
+    assert row["avgRecall"] == pytest.approx(0.25)  # (0.5 + 0.0) / 2
+    assert row["minRecall"] == 0.0

@@ -35,13 +35,12 @@ SF_DIR = "/root/testdata/sf0.001"
 # instead.
 BNLJ_WHITELIST = {
     # ann_recall left this list in r14: its exact side now runs the
-    # cosine_topk_blas kernel (no pair join at all)
+    # cosine_topk BLAS kernel (no pair join at all)
     "bigram_lm",
     "delta_lm_score",  # 1-row broadcast (N, V) model totals
     # l2_topk / cosine_topk: REMOVED r15 — both registry queries now
     # run the BLAS certify kernels (queries ride the task closure, no
-    # pair join at all); the interpreted column forms and their BNLJ
-    # shape stay exercised by test_blas_topk_twins_match_column_forms
+    # pair join at all)
     "lm_stupid_backoff",  # 1-row broadcast (N, V) model totals
     "bm25_index_search",  # 1-row broadcast (_nDocs, _sumDl) corpus stats
     "bm25_retrieval",
@@ -63,8 +62,8 @@ BNLJ_WHITELIST = {
     # in build_registry_feature_matrix cut the re-planned subtree that
     # had been degrading a stats-sized broadcast join to BNLJ
     "liftover_chain",
-    "mrl_funnel",
-    "mrl_topk",
+    # mrl_funnel / mrl_topk: REMOVED — their cosine shortlist runs the
+    # cosine_topk BLAS kernel, so the self-pair BNLJ is gone
     "nb_language_model",
     "nb_language_predict",
     "temperature_mixture",

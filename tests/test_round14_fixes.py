@@ -2,7 +2,7 @@
 state of ``fold_cc_labels`` (refold must not be blocked by the
 converged-input guard), the crash-safe recall-certification ledger,
 and the ``exact_l2_topk`` null-distance drop (k > valid neighbours —
-asserted in test_round13_fixes alongside its siblings)."""
+asserted in test_pq.py alongside its siblings)."""
 
 from __future__ import annotations
 

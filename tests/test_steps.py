@@ -5,8 +5,11 @@ to the `steps.py` registry and the `python -m` CLI."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +23,7 @@ from test_reference_samples import DATA as REFERENCE_DATA
 from test_reference_samples import pytestmark as needs_reference_data
 
 SF = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -1581,3 +1585,191 @@ def test_cc_labels_random_multi_append_equals_full(spark, tmp_path, seed):
             assert all(t not in aliases for t in aliases.values()), (
                 f"day {day}: alias chain formed"
             )
+
+
+def test_line_freq_compact_crash_windows_self_heal(spark, tmp_path):
+    """The line-frequency table IS the corpus evidence (the original
+    crawls are gone), so its in-place compaction gets the same
+    crash contract as cc_labels: tmp-write → delete → rename, with
+    every consumer finishing an interrupted rename. Plant both crash
+    windows and assert no state is ever torn."""
+    docs = spark.createDataFrame(
+        [(i, "the same line " + ("x" if i % 2 else "y")) for i in range(20)],
+        "doc_id long, text string",
+    )
+    docs_p = str(tmp_path / "docs.parquet")
+    docs.write.parquet(docs_p)
+    freq_p = str(tmp_path / "freq.parquet")
+    run_step(spark, "line_freq", {"corpus": docs_p}, freq_p, params={"sep": " "})
+    run_step(
+        spark, "line_freq", {"corpus": docs_p}, freq_p,
+        params={"sep": " ", "mode": "append"},
+    )
+    want = {
+        r["segHash"]: r["segCount"]
+        for r in spark.read.parquet(freq_p)
+        .groupBy("segHash").sum("segCount")
+        .withColumnRenamed("sum(segCount)", "segCount").collect()
+    }
+
+    # window (b): committed tmp, table deleted (crash between delete
+    # and rename) — the next append self-heals before writing
+    compacted = (
+        spark.read.parquet(freq_p)
+        .groupBy("segHash").agg(F.sum("segCount").alias("segCount"))
+    )
+    tmp = freq_p + "__compacting"
+    compacted.write.parquet(tmp)
+    shutil.rmtree(freq_p)
+    run_step(
+        spark, "line_freq", {"corpus": docs_p}, freq_p,
+        params={"sep": " ", "mode": "append"},
+    )
+    got = {
+        r["segHash"]: r["segCount"]
+        for r in spark.read.parquet(freq_p)
+        .groupBy("segHash").sum("segCount")
+        .withColumnRenamed("sum(segCount)", "segCount").collect()
+    }
+    # recovered table + one more shard of the same corpus = 1.5x counts
+    assert got == {k: v + v // 2 for k, v in want.items()}
+    assert not os.path.exists(tmp)
+
+    # window (a): stale tmp with the table intact (crash before the
+    # delete) — compact discards the tmp and completes normally
+    compacted2 = (
+        spark.read.parquet(freq_p)
+        .groupBy("segHash").agg(F.sum("segCount").alias("segCount"))
+    )
+    compacted2.limit(1).write.parquet(tmp)  # junk tmp (wrong content)
+    run_step(
+        spark, "line_freq", {"corpus": freq_p}, freq_p,
+        params={"mode": "compact"},
+    )
+    got2 = {
+        r["segHash"]: r["segCount"]
+        for r in spark.read.parquet(freq_p).collect()
+    }
+    assert got2 == got  # compacted to one row per hash, counts intact
+    assert not os.path.exists(tmp)
+
+    # the scrub CONSUMER also self-heals an interrupted rename: plant
+    # window (b) again and read through line_scrub's freq= path
+    spark.read.parquet(freq_p).write.parquet(tmp)
+    shutil.rmtree(freq_p)
+    out = run_step(
+        spark, "line_scrub", {"docs": docs_p}, None,
+        params={
+            "sep": " ", "max_count": 1, "min_segment_chars": 1,
+            "freq": freq_p,
+        },
+        write=False,
+    )
+    assert out.count() == 20 and os.path.exists(freq_p)
+
+
+def test_empty_ledger_reseeds_instead_of_undercertifying(spark, tmp_path):
+    """A crashed ledger compaction (saveAsTable overwrite = drop +
+    rewrite) can leave the counts ledger registered but EMPTY; the
+    next append must NOT total touched buckets against that empty
+    history (it would certify a too-low max and let a cross-append
+    hot bucket slip past the ceiling) — it reseeds via the full
+    recompute branch, exactly like a pre-sidecar index."""
+    from genetics_spark_coloc_spark.session import write_bucketed
+
+    shared = "the quick brown fox jumps over the lazy dog again and again"
+
+    def batch(start_id):
+        rows = [(start_id + i, shared) for i in range(3)]
+        rows += [
+            (
+                start_id + 3 + i,
+                " ".join(
+                    f"w{start_id}x{i}t{j}v{(i * 7 + j * 13) % 97}"
+                    for j in range(30)
+                ),
+            )
+            for i in range(10)
+        ]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    p0, p1 = str(tmp_path / "b0.parquet"), str(tmp_path / "b1.parquet")
+    batch(0).write.parquet(p0)
+    batch(100).write.parquet(p1)
+    tbl = "band_index_empty_ledger"
+    bp = {"num_perm": 16, "band_size": 4}
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}_bucket_counts")
+    try:
+        run_step(spark, "lsh_band_index", {"corpus": p0}, tbl,
+                 params={"num_buckets": 4, **bp})
+        # planted crash outcome: ledger exists but holds zero rows
+        # (checkpoint severs the self-read before the overwrite)
+        write_bucketed(
+            spark.table(f"{tbl}_bucket_counts")
+            .limit(0)
+            .localCheckpoint(eager=True),
+            f"{tbl}_bucket_counts",
+            ["bandIdx", "bandHash"],
+            num_buckets=16,
+        )
+        run_step(spark, "lsh_band_index", {"corpus": p1}, tbl,
+                 params={"mode": "append", **bp})
+        props = {
+            r["key"]: r["value"]
+            for r in spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect()
+        }
+        certified = int(props["genetics_spark_coloc.max_bucket_count"])
+        direct = (
+            spark.table(tbl)
+            .groupBy("bandIdx", "bandHash")
+            .count()
+            .agg(F.max("count"))
+            .collect()[0][0]
+        )
+        assert certified == direct == 6, (
+            f"empty ledger under-certified: {certified} vs true {direct}"
+        )
+        # and the reseed left the ledger consistent again
+        ledger_max = (
+            spark.table(f"{tbl}_bucket_counts")
+            .groupBy("bandIdx", "bandHash")
+            .agg(F.sum("c").alias("t"))
+            .agg(F.max("t"))
+            .collect()[0][0]
+        )
+        assert int(ledger_max) == 6
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}_bucket_counts")
+
+
+def test_cli_catalog_scoped_to_catalog_steps(tmp_path):
+    """A non-catalog CLI step (``__main__.py``) must not open
+    the Derby metastore — no metastore_db/ or derby.log side effects
+    in cwd, so concurrent non-catalog runs cannot collide on Derby's
+    single-process lock. (Catalog steps — lsh_band_index,
+    bucket_layout, lsh_pairs with index= — still opt in via
+    StepSpec.needs_catalog; the README quickstart test covers them.)"""
+    corpus = f"{SF}/documents.parquet"
+    r = subprocess.run(
+        [
+            sys.executable, "-m", "genetics_spark_coloc_spark", "run",
+            "corpus_overlap",
+            "--in", f"left={corpus}", "--in", f"right={corpus}",
+            "--out", str(tmp_path / "overlap.parquet"),
+            "--param", "k=32",
+            "--master", "local[2]", "--shuffle-partitions", "2",
+        ],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env={**os.environ, "PYTHONPATH": str(REPO)},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    leftovers = {
+        n for n in os.listdir(tmp_path)
+        if n in ("metastore_db", "derby.log")
+    }
+    assert not leftovers, f"non-catalog step leaked {leftovers} into cwd"

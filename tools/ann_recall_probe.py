@@ -40,7 +40,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from genetics_spark_coloc_spark.operators.similarity import (
-        cosine_topk_blas as cosine_topk,
+        cosine_topk,
         ivf_topk,
         kmeans_lloyd,
     )
@@ -145,9 +145,7 @@ def sq8_recall(n_corpus: int = 200_000) -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     from genetics_spark_coloc_spark.operators.pq import sq8_encode, sq8_topk
-    from genetics_spark_coloc_spark.operators.similarity import (
-        cosine_topk_blas as cosine_topk,
-    )
+    from genetics_spark_coloc_spark.operators.similarity import cosine_topk
 
     def gen(batches):
         import numpy as np
