@@ -75,124 +75,88 @@ def connected_components(
     src_col: str = "leftId",
     dst_col: str = "rightId",
     num_rounds: int = 8,
-    until_converged: bool = False,
-    check_every: int = 1,
     stats_out: "dict | None" = None,
-    unroll: int = 1,
     checkpoint_dir: "str | None" = None,
     dedup_edges: bool = True,
     small_graph_edges: "int | None" = 1_000_000,
 ) -> DataFrame:
     """Label every vertex with the MINIMUM vertex id reachable from it.
 
-    ``small_graph_edges`` (r15): the graph analogue of a broadcast
-    join. When the SYMMETRIC edge table holds at most this many rows
-    (one count() on the table the loop had to materialize anyway),
-    the component labeling is computed exactly with a driver-side
-    union-find over the collected edges instead of 3–6 distributed
-    loop actions — identical output (union-find with min-id roots IS
-    the fixed point the loop converges to), bounded driver memory
-    (1M edge rows ≈ tens of MB, the same order a broadcast relation
-    is allowed), no loop, no convergence checks. At corpus scale the
-    full-graph solve never fits the bound and takes the distributed
-    loop unchanged; the bound exists for the O(delta) graphs the
-    incremental path contracts to (``incremental_connected_components``
-    reduces a day's fold to delta-bound edges BY DESIGN) and for the
-    reduced/history graphs of registry-scale runs. ``None`` or 0
-    disables (tests that pin loop behavior pass 0).
-
     vertices: one row per vertex (``id_col``); edges: undirected
     pairs (``src_col``, ``dst_col``) whose endpoints appear in
     ``vertices``; an edge with a null endpoint is dropped. Returns
     (id, component).
 
-    r14 kernel shape (all three changes preserve the result bit-exactly
-    and were A/B-verified against the old kernel on the sf0.1 LSH
-    graph):
+    ``small_graph_edges``: the graph analogue of a broadcast join.
+    When the SYMMETRIC edge table holds at most this many rows (one
+    count() on the table the loop had to materialize anyway), the
+    labeling is computed exactly with a driver-side union-find over
+    the collected edges instead of the distributed loop — identical
+    output (union-find with min-id roots IS the fixed point the loop
+    converges to), bounded driver memory (1M edge rows ≈ tens of MB,
+    the order a broadcast relation is allowed). At corpus scale the
+    full-graph solve never fits the bound and takes the loop; the
+    bound exists for the O(delta) graphs
+    ``incremental_connected_components`` contracts a day's fold to,
+    and for the reduced/history graphs of registry-scale runs.
+    ``None`` or 0 disables (tests that pin loop behavior pass 0).
 
-    - **Only edge-incident vertices ride the loop.** An isolated vertex
-      is its own singleton component by definition; shuffling its label
-      through every propagate/shortcut round moves bytes that cannot
-      change (guide §2.3). The loop runs over the edge endpoints and
-      the isolated remainder unions in once at the end as (id, id).
-      At corpus scale docs ≫ pair endpoints, so this turns the
-      per-round shuffle from O(|V|) to O(|touched|).
-    - **Lazy local checkpoints, materialized by the convergence
-      check.** The old eager per-round checkpoint was its own job; with
-      ``checkpoint_dir`` unset the checkpoint is now lazy and the check
-      action executes (and caches) the accumulated rounds — one job per
-      checked round instead of two or three. Reliable-checkpoint mode
-      (``checkpoint_dir`` set) keeps eager rounds: the
-      superseded-checkpoint disk sweep needs materialization order.
-    - **The convergence witness is the bridging-edge check** (r14,
-      replacing the r13 sum witness): converged iff no edge joins two
-      different labels — exact for EVERY id type (strings included),
-      and decisive on the very action that converges (the sum witness
-      needed one extra no-change segment as its baseline). Proof in
-      the inline comment at ``_bridging``.
-    - **Self-loop propagate + growing segments** (r14): the symmetric
-      edge table carries a self-loop per incident vertex, so each
-      propagation is ONE join + ONE aggregation referencing the
-      labels table once — the old union-with-self referenced it
-      twice and the per-propagation shortcut twice more, growing the
-      lazily-built segment plan 4× per propagation, which is what
-      made unrolls deeper than 2 slower (Catalyst choked on 4^k
-      subtree copies, measured r14). With linear plan growth the
-      schedule runs ``unroll`` propagations in the first checked
-      segment and 2×``unroll`` in later ones, and the
-      pointer-doubling shortcut every 2nd propagation: deep chains
-      amortize per-action latency over twice the work while small
-      graphs still stop after one cheap segment. Measured on the
-      sf0.1 LSH graphs: 7 → 4 actions / 5.2 → 3.0 s (clique-heavy
-      history graph), 5 → 3 actions / 3.1 → 2.4 s (corpus graph),
-      labelings bit-equal. Total propagations are bounded by
-      ``2 × num_rounds × unroll`` in converged mode (the jump rides
-      only every 2nd propagation, so the doubled ceiling is at least
-      as strong as the r13 1-prop+1-jump round budget; the loop still
-      stops at convergence) and by exactly ``num_rounds × unroll`` in
-      fixed-budget mode.
+    The distributed loop:
+
+    - **Only edge-incident vertices ride the loop.** An isolated
+      vertex is its own singleton component; shuffling its label
+      through every round moves bytes that cannot change. The
+      isolated remainder unions in once at the end as (id, id), so
+      the per-round shuffle is O(|touched|), not O(|V|).
+    - **Self-loop propagate.** The symmetric edge table carries a
+      self-loop per incident vertex, so each propagation is ONE join
+      + ONE aggregation referencing the labels table once and the
+      lazily-built segment plan grows linearly. (A union-with-self
+      plus a per-propagation shortcut grew it 4× per propagation and
+      made segments deeper than 2 unplannable.)
+    - **One schedule.** The first segment runs 2 propagations, later
+      segments 4, with the pointer-doubling shortcut every 2nd
+      propagation, and the convergence check runs after EVERY
+      segment: small graphs stop after one cheap segment while deep
+      chains amortize the per-action latency over more work
+      (measured on the sf0.1 LSH graphs: 7 → 4 actions / 5.2 → 3.0 s
+      on the clique-heavy history graph, 5 → 3 / 3.1 → 2.4 s on the
+      corpus graph, labelings bit-equal). Checking every second
+      segment measured slower. The ceiling is
+      ``2 × num_rounds × 2`` propagations: a (2 props + 1 jump)
+      double round dominates a (1 prop + 1 jump) round, so the
+      ceiling is at least as strong as ``num_rounds`` such rounds,
+      and graphs that converge earlier pay nothing for it. An
+      unconverged labeling would silently split true clusters, so
+      exhausting the ceiling raises RuntimeError.
+    - **The convergence witness is the bridging-edge check**:
+      converged iff no edge joins two different labels — exact for
+      every id type (strings included) and decisive on the very
+      action that converges. Proof at ``_bridging``. Without
+      ``checkpoint_dir`` each segment's local checkpoint is lazy, and
+      the check's count() is what materializes it — one job per
+      segment.
 
     ``dedup_edges=False`` skips the symmetric edge table's
     ``distinct()``: duplicate edges cannot change any min, only inflate
     the per-round join, so callers whose pair generator already emits
     distinct oriented pairs (the LSH/banded family) save the exchange.
 
-    ``num_rounds × unroll`` bounds the total propagations in
-    fixed-budget mode; converged mode widens the ceiling to
-    ``2 × num_rounds × unroll`` (see the schedule bullet above). Set
-    ``until_converged`` to stop early (costs one bridging count()
-    action per check — leave it off inside larger pipelines and size
-    num_rounds instead). ``check_every`` spaces the convergence
-    checks across segments (default 1 — the growing schedule already
-    spaces the work). ``unroll`` sizes the FIRST checked segment;
-    later segments run 2×``unroll`` propagations (see the schedule
-    bullet above). **r14 semantic change** for external probes:
-    ``check_every`` now spaces SEGMENTS (each ``unroll`` or
-    2×``unroll`` propagations), not single rounds, and
-    ``stats_out["rounds"]`` counts checked segments — read
-    ``stats_out["propagations"]`` for the propagation count the old
-    "rounds" value tracked.
+    Pass a dict as ``stats_out`` to receive ``{"rounds": <segments
+    executed>, "propagations": <total propagations run>, "converged":
+    bool}`` (plus ``small_graph_fast_path_edges`` on the fast path) —
+    the scale probes record the loop effort this way.
 
-    When ``until_converged`` is off, a single cheap final check
-    verifies no edge still connects two different labels and raises
-    RuntimeError if the fixed round budget was too small — an
-    unconverged labeling would silently split true clusters.
-
-    Pass a dict as ``stats_out`` to receive ``{"rounds": <checked
-    segments executed>, "propagations": <total propagations run>,
-    "converged": bool}`` — the scale probes record the loop effort
-    this way without re-implementing the loop.
-
-    ``checkpoint_dir`` swaps the per-round localCheckpoint (blocks
-    pinned in executor/driver storage memory) for a RELIABLE disk
-    checkpoint rooted in a PER-RUN subdirectory of it
+    ``checkpoint_dir`` swaps the per-segment localCheckpoint (blocks
+    pinned in executor/driver storage memory) for an eager RELIABLE
+    disk checkpoint rooted in a PER-RUN subdirectory of it
     (``<checkpoint_dir>/cc_<hex>``). On a cluster the local blocks
     spread over executor heaps and this is unnecessary; in local mode
-    every round's label table lands in the ONE driver-side block
+    every segment's label table lands in the ONE driver-side block
     manager, and past ~50M edges that exhausts the default heap
     (BASELINE.md r9 probe needed SPARK_GRAFT_DRIVER_MEM=48g) —
     pointing ``checkpoint_dir`` at any scratch path removes that
-    requirement at the cost of per-round parquet-ish disk writes.
+    requirement at the cost of per-segment disk writes.
 
     Two lifecycle contracts when ``checkpoint_dir`` is set:
 
@@ -201,17 +165,12 @@ def connected_components(
       ``sparkContext.setCheckpointDir`` at the per-run subdirectory —
       any later ``df.checkpoint()`` elsewhere in the session lands
       there too until someone sets it again.
-    - Disk lifecycle: with ``until_converged=True`` (eager rounds),
-      SUPERSEDED round checkpoints are deleted as the loop advances
-      and only the FINAL round's files remain at return — the
-      returned DataFrame reads them, so they must outlive it (Spark
-      itself deletes them at context shutdown only under
-      ``spark.cleaner.referenceTracking.cleanCheckpoints=true``,
-      recommended for long-lived sessions). With
-      ``until_converged=False`` the checkpoints are lazy (they
-      materialize on the first downstream action), so nothing can be
-      safely deleted here and the whole per-run subdirectory persists
-      — prefer eager mode for big local-mode runs.
+    - Disk lifecycle: SUPERSEDED segment checkpoints are deleted as
+      the loop advances and only the FINAL labels' files remain at
+      return — the returned DataFrame reads them, so they must
+      outlive it (Spark itself deletes them at context shutdown only
+      under ``spark.cleaner.referenceTracking.cleanCheckpoints=true``,
+      recommended for long-lived sessions).
     """
     spark = vertices.sparkSession
     ckpt_root = None
@@ -220,11 +179,14 @@ def connected_components(
 
         ckpt_root = f"{checkpoint_dir.rstrip('/')}/cc_{uuid.uuid4().hex[:12]}"
         spark.sparkContext.setCheckpointDir(ckpt_root)
+    # reliable checkpoints are eager: the superseded-checkpoint disk
+    # sweep needs materialization order
+    cleanup = ckpt_root is not None
 
-    def _ckpt(df: DataFrame, eager: bool) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=eager)
-        return df.localCheckpoint(eager=eager)
+    def _ckpt(df: DataFrame) -> DataFrame:
+        if cleanup:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=False)
 
     def _rdd_dirs() -> "dict[int, object]":
         # reliable checkpoints live at <root>/<uuid>/rdd-<id>; the id
@@ -244,11 +206,9 @@ def connected_components(
         return out
 
     def _drop_superseded(keep_ids: "set[int]", keep_newest: bool = True) -> None:
-        # delete every materialized round checkpoint except the
-        # NEWEST (the current labels — the only one later rounds and
+        # delete every materialized segment checkpoint except the
+        # NEWEST (the current labels — the only one later segments and
         # the returned DataFrame read) and the pinned keep set (sym)
-        if ckpt_root is None:
-            return
         dirs = _rdd_dirs()
         if not dirs:
             return
@@ -275,32 +235,24 @@ def connected_components(
     )
     if dedup_edges:
         sym = sym.distinct()
-    # every round joins against the edge table; without a barrier the
-    # upstream pair-generation pipeline (e.g. MinHash-LSH) would
-    # re-execute once per round. The table carries a SELF-LOOP per
-    # incident vertex (r14): propagate then includes the vertex's own
-    # label through the join itself, so each propagation references
-    # the labels table ONCE — the old union-with-self referenced it
-    # twice, doubling the lazily-built plan per propagation and
-    # making unrolls deeper than 2 unplannable (4^k subtree copies).
-    # Self-loops are invisible to the bridging convergence check
-    # below (their two label lookups are equal by construction).
+    # every segment joins against the edge table; without a barrier
+    # the upstream pair-generation pipeline (e.g. MinHash-LSH) would
+    # re-execute once per segment. Self-loops (added below) are
+    # invisible to the bridging convergence check (their two label
+    # lookups are equal by construction).
     #
-    # r15 (ADVICE finding): the symmetric edge table is checkpointed
-    # BEFORE the incident-vertex derivation, and the loop table is the
-    # lazy union of the two checkpointed branches — the old shape
-    # checkpointed only the final union, so its single materialization
-    # contained the upstream pipeline once under each union branch AND
+    # The symmetric edge table is checkpointed BEFORE the
+    # incident-vertex derivation, and the loop table is the lazy union
+    # of the two checkpointed branches — checkpointing only the final
+    # union put the upstream pipeline once under each union branch AND
     # once more under the incident distinct (callers without a
     # pre-checkpointed pair table, e.g. q_dedup_clusters' full minhash
     # chain, executed that upstream 2×). The union itself needs no
     # barrier: both branches are cached, and every consumer (the
     # per-propagation join, the bridging check) shuffles it anyway.
-    # In eager reliable-checkpoint mode both branches materialize NOW
-    # so their rdd dirs can be pinned out of the per-round
-    # superseded-checkpoint cleanup.
-    cleanup = ckpt_root is not None and until_converged
-    sym = _ckpt(sym, eager=cleanup)
+    # With reliable checkpoints both branches materialize NOW so their
+    # rdd dirs can be pinned out of the per-segment sweep.
+    sym = _ckpt(sym)
     fast_n = None
     if small_graph_edges:
         # the count materializes the checkpoint the loop needed
@@ -311,7 +263,6 @@ def connected_components(
             fast_n = n_sym
     if fast_n is not None:
         labels = _union_find_labels(spark, sym, vertices.schema[id_col])
-        converged, spent, executed = True, 0, 0
         pinned_ids: set = set()
     else:
         # only vertices an edge can reach ride the loop; the isolated
@@ -324,10 +275,7 @@ def connected_components(
         # the return must outlive.
         incident = sym.select("src").distinct()
         sym = _ckpt(
-            sym.unionByName(
-                incident.select("src", F.col("src").alias("dst"))
-            ),
-            eager=cleanup,
+            sym.unionByName(incident.select("src", F.col("src").alias("dst")))
         )
         pinned_ids = set(_rdd_dirs()) if cleanup else set()
         labels = incident.select(
@@ -335,15 +283,15 @@ def connected_components(
         )
 
     def _bridging(lbl: DataFrame) -> int:
-        # EXACT convergence witness, any id type (r14): converged iff
-        # no edge joins two labels. (⇐) no bridging edge ⇒ labels are
+        # EXACT convergence witness, any id type: converged iff no
+        # edge joins two labels. (⇐) no bridging edge ⇒ labels are
         # constant per component, and each component contains its own
         # minimum m with label(m) = m (labels only ever hold reachable
         # ids ≥ the component minimum and start at the vertex itself),
         # so every label IS the component minimum. (⇒) trivial. Unlike
-        # the r13 sum witness this needs NO second no-change segment —
+        # a label-sum witness this needs NO second no-change segment —
         # the loop stops on the exact converging action — and it is
-        # type-agnostic, so the old string-id join fallback is gone.
+        # type-agnostic.
         return (
             sym.join(
                 lbl.select(
@@ -362,38 +310,16 @@ def connected_components(
             .count()
         )
 
-    # propagation schedule (r14): the first checked segment runs
-    # `unroll` propagations, later segments 2×`unroll` — small graphs
-    # stop after one cheap segment, deep chains amortize the
-    # per-action latency (driver round-trip + AQE stage waves) over
-    # more propagations. The pointer-doubling shortcut runs every 2nd
-    # propagation: its join references labels twice, so per-prop
-    # shortcutting is what made deep unrolls blow up the plan (and it
-    # measured ~40% slower wall for the same action count — the extra
-    # jump joins are not free). Because a jump now rides only every
-    # 2nd propagation, converged mode doubles the propagation CEILING:
-    # a (2 props + 1 jump) double-round dominates an old (1 prop +
-    # 1 jump) round, so 2 × num_rounds × unroll propagations are at
-    # least as strong as the r13 budget — and the loop stops at
-    # convergence, so graphs that converged inside the old budget pay
-    # nothing for the wider ceiling. Fixed-budget mode (no checks)
-    # keeps exactly num_rounds × unroll propagations — its cost is
-    # the whole plan, and the final bridging check still raises
-    # loudly if that is too small.
-    budget = (
-        0
-        if fast_n is not None
-        else num_rounds * max(1, unroll) * (2 if until_converged else 1)
-    )
-    step_unroll = max(1, unroll)
-    if fast_n is None:
-        spent = 0
-        executed = 0
-        converged = False
-    while spent < budget:
+    # the shortcut's join references labels twice, so it rides only
+    # every 2nd propagation: per-propagation shortcuts blew up the
+    # segment plan and measured ~40% slower wall for the same action
+    # count (see the docstring for the schedule and its ceiling)
+    budget = 2 * num_rounds * 2
+    spent = executed = 0
+    converged = fast_n is not None
+    while not converged and spent < budget:
         executed += 1
-        seg = min(step_unroll if executed == 1 else 2 * step_unroll,
-                  budget - spent)
+        seg = min(2 if executed == 1 else 4, budget - spent)
         spent += seg
         for _step in range(seg):
             # propagate: min label over self (self-loop) + neighbours
@@ -417,28 +343,20 @@ def connected_components(
                         ).alias("label"),
                     )
                 )
-        labels = _ckpt(labels, eager=cleanup)
-        if until_converged and executed % max(1, check_every) == 0:
-            # the count materializes the (lazy) checkpoint and reads
-            # back a single scalar — not a data collect
-            if _bridging(labels) == 0:
-                converged = True
-                if cleanup:
-                    _drop_superseded(pinned_ids)
-                break
-        # the superseded-round sweep runs AFTER the convergence check
+        labels = _ckpt(labels)
+        # the count materializes the (lazy) checkpoint and reads back
+        # a single scalar — not a data collect
+        converged = _bridging(labels) == 0
+        # the superseded-segment sweep runs AFTER the convergence check
         if cleanup:
             _drop_superseded(pinned_ids)
     if not converged:
-        # budget exhausted (or checks disabled): one final exact check
-        if _bridging(labels) > 0:
-            raise RuntimeError(
-                f"connected_components did not converge in {spent} "
-                f"propagations across {executed} segments (budget "
-                f"{budget}; an edge still bridges two labels); raise "
-                "num_rounds or set until_converged=True"
-            )
-        converged = True
+        raise RuntimeError(
+            f"connected_components did not converge in {spent} "
+            f"propagations across {executed} segments (budget "
+            f"{budget}; an edge still bridges two labels); raise "
+            "num_rounds"
+        )
     if cleanup:
         # sym's pinned checkpoints are garbage once the bridging check
         # (their last consumer) is behind us: the returned DataFrame's
@@ -457,8 +375,8 @@ def connected_components(
     # singleton component; they skipped the loop entirely. The
     # anti-join reads the final labels checkpoint (its id set == the
     # edge-incident set), which is exactly the file the returned
-    # DataFrame must outlive anyway — the eager-mode final sweep can
-    # therefore drop every other checkpoint.
+    # DataFrame must outlive anyway — the reliable-checkpoint final
+    # sweep can therefore drop every other checkpoint.
     rest = vertices.select(F.col(id_col).alias("id")).join(
         labels.select("id"), on="id", how="left_anti"
     )
@@ -474,7 +392,6 @@ def duplicate_clusters(
     src_col: str = "leftId",
     dst_col: str = "rightId",
     num_rounds: int = 16,
-    until_converged: bool = True,
     checkpoint_dir: "str | None" = None,
 ) -> DataFrame:
     """Resolve candidate duplicate pairs into clusters with a keeper.
@@ -483,12 +400,9 @@ def duplicate_clusters(
     cluster, clusterSize, isKeeper). Isolated documents form their
     own singleton cluster.
 
-    Convergence is CHECKED by default: an unconverged labeling would
-    silently split true clusters (extra keepers ⇒ surviving
-    duplicates). Near-dup graphs converge in a few rounds; the check
-    costs one small count() per round. ``checkpoint_dir`` forwards to
-    :func:`connected_components` (disk checkpoints for giant local
-    runs).
+    Near-dup graphs converge in a few segments of
+    :func:`connected_components`; ``checkpoint_dir`` forwards to it
+    (disk checkpoints for giant local runs).
     """
     comp = connected_components(
         docs.select(F.col(id_col)),
@@ -497,11 +411,6 @@ def duplicate_clusters(
         src_col,
         dst_col,
         num_rounds,
-        until_converged=until_converged,
-        # check after every segment: the kernel's growing schedule
-        # already spaces the bridging-check actions (r14)
-        check_every=1,
-        unroll=2,
         checkpoint_dir=checkpoint_dir,
         # LSH candidate pairs are distinct oriented (left < right):
         # the symmetric union cannot contain duplicates
@@ -528,7 +437,8 @@ def incremental_connected_components(
     src_col: str = "leftId",
     dst_col: str = "rightId",
     remap_out: "dict | None" = None,
-    **cc_kwargs,
+    num_rounds: int = 8,
+    dedup_edges: bool = False,
 ) -> DataFrame:
     """Incremental duplicate-cluster maintenance: fold a DELTA batch's
     edges into an existing CONVERGED labeling without re-running
@@ -568,8 +478,10 @@ def incremental_connected_components(
     history rewrite. Never-seen edge endpoints always get rows;
     ``delta_vertices`` additionally rosters edgeless newcomers (as
     singleton clusters) and may overlap history — known ids are
-    ignored (their rows come from the history side). ``cc_kwargs``
-    forward to :func:`connected_components` for the reduced solve.
+    ignored (their rows come from the history side). ``num_rounds``
+    and ``dedup_edges`` forward to :func:`connected_components` for
+    the reduced solve; the reduced edges are distinct oriented by
+    construction, so the symmetric-union dedup is off by default.
     """
     lab = labels.select(
         F.col(id_col).alias("_lid"), F.col("component").alias("_lcomp")
@@ -605,11 +517,14 @@ def incremental_connected_components(
     # here, so pass an empty frame rather than paying a distinct over
     # canon's endpoints
     nodes = canon.select(F.col("src").alias("id")).limit(0)
-    # canon is distinct oriented by construction: skip the kernel's
-    # symmetric-union dedup unless the caller overrides
-    cc_kwargs.setdefault("dedup_edges", False)
     reduced = connected_components(
-        nodes, canon, "id", "src", "dst", **cc_kwargs
+        nodes,
+        canon,
+        "id",
+        "src",
+        "dst",
+        num_rounds=num_rounds,
+        dedup_edges=dedup_edges,
     )
     # only the canonical ids whose label actually moved — O(changed
     # components), broadcastable by construction
@@ -998,9 +913,6 @@ def _fold_cc_labels_unlocked(
         dst_col=dst_col,
         remap_out=parts,
         num_rounds=num_rounds,
-        until_converged=True,
-        check_every=2,
-        unroll=2,
     )
     remap = parts["remap"].localCheckpoint(eager=True)
     new_rows = parts["new_rows"].localCheckpoint(eager=True)

@@ -22,13 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# most reachability pairs the driver-side closure holds before it
+# declines to the distributed loop
+DRIVER_PAIR_BOUND = 2_000_000
+
 
 def _closure_local(
     spark,
     paths: DataFrame,
     keys: "list[str]",
     max_pairs: "int | None",
-    driver_pair_bound: int,
 ) -> "DataFrame | None":
     """Driver-side exact closure of a SMALL edge table (the
     ``small_graph_edges`` fast path of :func:`transitive_closure` —
@@ -39,7 +42,7 @@ def _closure_local(
     in O(closure-size) set work. Returns None to decline — on a
     detected cycle (the memoization would not terminate; the
     distributed distinct-fixpoint loop handles cycles) or when the
-    closure outgrows ``driver_pair_bound`` (legal size, just too big
+    closure outgrows ``DRIVER_PAIR_BOUND`` (legal size, just too big
     to hold locally). Raises the max_pairs RuntimeError exactly like
     the distributed guard when the TRUE closure exceeds it."""
     import pandas as pd
@@ -51,7 +54,7 @@ def _closure_local(
         kt, node, dest = row[:-2], row[-2], row[-1]
         adj.setdefault(kt, {}).setdefault(node, []).append(dest)
     hard = max_pairs if max_pairs is not None else float("inf")
-    soft = min(hard, driver_pair_bound)
+    soft = min(hard, DRIVER_PAIR_BOUND)
     out_keys: list = []
     out_nodes: list = []
     out_dests: list = []
@@ -123,7 +126,6 @@ def transitive_closure(
     group_cols: "tuple[str, ...]" = (),
     max_pairs: "int | None" = 100_000_000,
     small_graph_edges: "int | None" = 50_000,
-    driver_pair_bound: int = 2_000_000,
 ) -> DataFrame:
     """All (node, ancestor) pairs reachable through ``edges``.
 
@@ -180,12 +182,10 @@ def transitive_closure(
     # ``small_graph_edges``, the exact closure is computed driver-side
     # in one pass instead of log(depth) join+distinct+count rounds;
     # it declines (returns None) on cycles or when the closure
-    # outgrows ``driver_pair_bound``, falling through to the
+    # outgrows ``DRIVER_PAIR_BOUND``, falling through to the
     # distributed loop unchanged. max_pairs is enforced either way.
     if small_graph_edges and count <= small_graph_edges:
-        local = _closure_local(
-            edges.sparkSession, paths, keys, max_pairs, driver_pair_bound
-        )
+        local = _closure_local(edges.sparkSession, paths, keys, max_pairs)
         if local is not None:
             return local
     for _ in range(max_iterations):

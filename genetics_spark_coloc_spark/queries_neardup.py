@@ -4318,20 +4318,6 @@ def q_delta_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # star=True: these pairs feed ONLY the CC solve — per-bucket
     # spanning star, identical components, ~m/2× fewer edges (r14)
     hist_pairs = dedup.band_self_pairs(bands_hist, star=True)
-    # converge-checked CC (unroll=2 first segment, then the kernel's
-    # growing schedule + bridging-edge witness — see
-    # connected_components' docstring); fixed-round mode measured
-    # SLOWER here and the sf0.1 LSH graph's ~10-propagation chains
-    # make a fixed budget unsafe across scales. hist_pairs/canon
-    # pairs are distinct oriented, so the kernel's symmetric-union
-    # dedup is skipped.
-    cc_kw = {
-        "num_rounds": 16,
-        "until_converged": True,
-        "check_every": 1,
-        "unroll": 2,
-        "dedup_edges": False,
-    }
     # band the delta ONCE (r14): the cross join and the intra-delta
     # star pairs share one shingle→minhash chain via delta_bands
     bands_delta = dedup._band_hashes(
@@ -4346,7 +4332,11 @@ def q_delta_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anti-join); the lazy checkpoint stops the CC tail (isolated-
     # vertex anti-join + union) re-executing per consumer (r14)
     labels_hist = connected_components(
-        hist.select(F.col("doc_id").alias("id")), hist_pairs, **cc_kw
+        hist.select(F.col("doc_id").alias("id")),
+        hist_pairs,
+        num_rounds=16,
+        # star pairs are distinct oriented: skip the symmetric dedup
+        dedup_edges=False,
     ).localCheckpoint(eager=False)
     delta_cross = dedup.incremental_lsh_candidates(
         delta,
@@ -4365,7 +4355,7 @@ def q_delta_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels_hist,
         delta_cross.unionByName(delta_self),
         delta_vertices=delta.select(F.col("doc_id").alias("id")),
-        **cc_kw,
+        num_rounds=16,
     )
     # cluster size via ONE window on the component exchange — the old
     # groupBy + join-back executed comp's final subtree twice (r14)

@@ -1297,9 +1297,6 @@ def _run_cc_labels(spark, inputs, output, p):
         src_col=src,
         dst_col=dst,
         num_rounds=p["num_rounds"],
-        until_converged=True,
-        check_every=1,
-        unroll=2,
     )
     # the root overwrite deletes the whole directory first, so a
     # prior build's _aliases sidecar cannot survive a rebuild; the

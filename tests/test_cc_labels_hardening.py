@@ -31,9 +31,7 @@ def _full(spark, rows):
     v = spark.createDataFrame([(i,) for i in ids], "id long")
     return {
         r["id"]: r["component"]
-        for r in connected_components(
-            v, _edges(spark, rows), until_converged=True
-        ).collect()
+        for r in connected_components(v, _edges(spark, rows)).collect()
     }
 
 
@@ -47,9 +45,7 @@ def _build(spark, tmp_path, rows, name="cc"):
     out = str(tmp_path / name)
     ids = sorted({v for e in rows for v in e})
     v = spark.createDataFrame([(i,) for i in ids], "id long")
-    connected_components(
-        v, _edges(spark, rows), until_converged=True
-    ).write.parquet(out)
+    connected_components(v, _edges(spark, rows)).write.parquet(out)
     return out
 
 
@@ -119,7 +115,7 @@ def test_fold_crash_after_shard_append_refold_repairs(spark, tmp_path):
     resolved = load_cc_labels(spark, out)
     parts: dict = {}
     incremental_connected_components(
-        resolved, _edges(spark, DELTA), remap_out=parts, until_converged=True
+        resolved, _edges(spark, DELTA), remap_out=parts
     )
     # first write only — the crash point is before the epoch commit
     parts["new_rows"].write.mode("append").parquet(out)
@@ -247,7 +243,6 @@ def test_random_crash_interleaving_always_repairs(spark, tmp_path, seed):
                 load_cc_labels(spark, out),
                 _edges(spark, batch),
                 remap_out=parts,
-                until_converged=True,
             )
             parts["new_rows"].write.mode("append").parquet(out)
             # intermediate must itself be converged (never torn)

@@ -33,9 +33,7 @@ def _build_cc(spark, tmp_path, rows):
     out = str(tmp_path / "cc")
     ids = sorted({v for e in rows for v in e})
     v = spark.createDataFrame([(i,) for i in ids], "id long")
-    connected_components(
-        v, _edges(spark, rows), until_converged=True
-    ).write.parquet(out)
+    connected_components(v, _edges(spark, rows)).write.parquet(out)
     return out
 
 

@@ -243,137 +243,6 @@ class TestBandedEditDistance:
         assert tight[("d", "e")]["isDup"] is True
 
 
-class TestIncrementalConnectedComponents:
-    """Incremental duplicate-cluster maintenance (r12): folding a
-    delta's edges into a converged labeling must equal the full
-    recompute over the union graph — the cluster-resolution member of
-    the O(delta) daily loop."""
-
-    def _labels(self, spark, rows):
-        return spark.createDataFrame(rows, "id long, component long")
-
-    def _edges(self, spark, rows):
-        return spark.createDataFrame(rows, "leftId long, rightId long")
-
-    def _full(self, spark, vertices, edges):
-        from genetics_spark_coloc_spark.operators.graph import (
-            connected_components,
-        )
-
-        v = spark.createDataFrame([(i,) for i in vertices], "id long")
-        e = self._edges(spark, edges)
-        return {
-            r["id"]: r["component"]
-            for r in connected_components(v, e, until_converged=True).collect()
-        }
-
-    def test_delta_merges_two_old_components(self, spark):
-        from genetics_spark_coloc_spark.operators.graph import (
-            incremental_connected_components,
-        )
-
-        # history: {1,2,3} -> 1 and {10,11} -> 10; delta edge 3-11
-        # merges them; new vertex 20 chains onto 10 via 20-10
-        labels = self._labels(
-            spark, [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
-        )
-        delta = self._edges(spark, [(3, 11), (20, 10)])
-        remap_out = {}
-        got = {
-            r["id"]: r["component"]
-            for r in incremental_connected_components(
-                labels, delta, remap_out=remap_out, until_converged=True
-            ).collect()
-        }
-        want = self._full(
-            spark,
-            [1, 2, 3, 10, 11, 20],
-            [(1, 2), (2, 3), (10, 11), (3, 11), (20, 10)],
-        )
-        assert got == want
-        assert got[11] == 1 and got[20] == 1
-        # the remap names only the moved canonical ids
-        remap = {
-            r["_oldComp"]: r["_newComp"] for r in remap_out["remap"].collect()
-        }
-        assert remap == {10: 1, 20: 1}
-
-    def test_edgeless_newcomer_is_singleton(self, spark):
-        from genetics_spark_coloc_spark.operators.graph import (
-            incremental_connected_components,
-        )
-
-        labels = self._labels(spark, [(1, 1), (2, 1)])
-        delta = self._edges(spark, [])
-        roster = spark.createDataFrame([(7,), (2,)], "id long")
-        got = {
-            r["id"]: r["component"]
-            for r in incremental_connected_components(
-                labels, delta, delta_vertices=roster, until_converged=True
-            ).collect()
-        }
-        # 7 lands as its own singleton; 2 (already known) is NOT
-        # duplicated — its row comes from history
-        assert got == {1: 1, 2: 1, 7: 7}
-
-    def test_new_vertices_bridge_and_win_minimum(self, spark):
-        from genetics_spark_coloc_spark.operators.graph import (
-            incremental_connected_components,
-        )
-
-        # new vertex 0 is SMALLER than every history id: it must
-        # become the component label of everything it touches
-        labels = self._labels(spark, [(5, 5), (6, 5), (9, 9)])
-        delta = self._edges(spark, [(0, 6), (0, 9)])
-        got = {
-            r["id"]: r["component"]
-            for r in incremental_connected_components(
-                labels, delta, until_converged=True
-            ).collect()
-        }
-        assert got == {5: 0, 6: 0, 9: 0, 0: 0}
-
-    def test_matches_full_recompute_on_random_graph(self, spark):
-        import random
-
-        from genetics_spark_coloc_spark.operators.graph import (
-            connected_components,
-            incremental_connected_components,
-        )
-
-        rng = random.Random(12)
-        n_hist, n_new = 60, 25
-        hist_edges = [
-            (rng.randrange(n_hist), rng.randrange(n_hist)) for _ in range(40)
-        ]
-        hist_edges = [(a, b) for a, b in hist_edges if a != b]
-        delta_edges = [
-            (rng.randrange(n_hist + n_new), rng.randrange(n_hist + n_new))
-            for _ in range(30)
-        ]
-        delta_edges = [(a, b) for a, b in delta_edges if a != b]
-        hv = spark.createDataFrame([(i,) for i in range(n_hist)], "id long")
-        labels = connected_components(
-            hv, self._edges(spark, hist_edges), until_converged=True
-        )
-        roster = spark.createDataFrame(
-            [(i,) for i in range(n_hist, n_hist + n_new)], "id long"
-        )
-        got = {
-            r["id"]: r["component"]
-            for r in incremental_connected_components(
-                labels,
-                self._edges(spark, delta_edges),
-                delta_vertices=roster,
-                until_converged=True,
-            ).collect()
-        }
-        want = self._full(
-            spark, range(n_hist + n_new), hist_edges + delta_edges
-        )
-        assert got == want
-
-
 def test_streaming_cc_maintenance_replay_parity(spark, tmp_path):
     """The streaming cluster fold: replaying delta pairs through
     streaming_cc_maintenance in multiple triggers leaves the persisted
@@ -428,7 +297,6 @@ def test_streaming_cc_maintenance_replay_parity(spark, tmp_path):
         for r in connected_components(
             spark.createDataFrame([(i,) for i in ids], "id long"),
             spark.createDataFrame(all_edges, "leftId long, rightId long"),
-            until_converged=True,
         ).collect()
     }
     got = {

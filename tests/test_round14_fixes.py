@@ -29,9 +29,7 @@ def _full(spark, rows):
     v = spark.createDataFrame([(i,) for i in ids], "id long")
     return {
         r["id"]: r["component"]
-        for r in connected_components(
-            v, _edges(spark, rows), until_converged=True
-        ).collect()
+        for r in connected_components(v, _edges(spark, rows)).collect()
     }
 
 
@@ -39,9 +37,7 @@ def _build(spark, tmp_path, rows, name="cc"):
     out = str(tmp_path / name)
     ids = sorted({v for e in rows for v in e})
     v = spark.createDataFrame([(i,) for i in ids], "id long")
-    connected_components(
-        v, _edges(spark, rows), until_converged=True
-    ).write.parquet(out)
+    connected_components(v, _edges(spark, rows)).write.parquet(out)
     return out
 
 
@@ -282,45 +278,6 @@ def test_line_freq_random_crash_interleaving_repairs(spark, tmp_path, seed):
     assert not os.path.exists(tmp)
 
 
-class TestCcKernelR14:
-    """r14 kernel changes: edge-incident loop set + singleton union,
-    sum-witness convergence gated to integral id types (a string id
-    would cast to NULL and falsely witness convergence), and
-    ``dedup_edges=False`` parity on pre-deduped oriented pairs."""
-
-    def test_string_ids_long_chain_converges_exactly(self, spark):
-        # 12-node chain: needs several propagate+shortcut rounds, so a
-        # falsely-instant witness would return a split labeling
-        names = [f"n{i:02d}" for i in range(12)]
-        v = spark.createDataFrame([(n,) for n in names] + [("zzz_iso",)], "id string")
-        e = spark.createDataFrame(
-            list(zip(names, names[1:])), "leftId string, rightId string"
-        )
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components(
-                v, e, until_converged=True, check_every=1
-            ).collect()
-        }
-        assert got == {**{n: "n00" for n in names}, "zzz_iso": "zzz_iso"}
-
-    def test_isolated_vertices_and_dedup_edges_parity(self, spark):
-        v = spark.createDataFrame([(i,) for i in range(8)], "id long")
-        # duplicate + both-orientation edges; dedup_edges=False must
-        # still produce the identical labeling
-        e = spark.createDataFrame(
-            [(1, 2), (2, 1), (1, 2), (3, 4)], "leftId long, rightId long"
-        )
-        for dd in (True, False):
-            got = {
-                r["id"]: r["component"]
-                for r in connected_components(
-                    v, e, until_converged=True, dedup_edges=dd
-                ).collect()
-            }
-            assert got == {0: 0, 1: 1, 2: 1, 3: 3, 4: 3, 5: 5, 6: 6, 7: 7}
-
-
 class TestStarPairs:
     """band_self_pairs(star=True): per-bucket spanning star — same
     connected components as the clique form, m-1 edges per bucket."""
@@ -362,7 +319,7 @@ class TestStarPairs:
             out[star] = {
                 r["id"]: r["component"]
                 for r in connected_components(
-                    verts, pairs, until_converged=True, dedup_edges=False
+                    verts, pairs, dedup_edges=False
                 ).collect()
             }
         assert out[True] == out[False]

@@ -312,9 +312,7 @@ def test_connected_components_until_converged_long_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "leftId: long, rightId: long"
     )
-    comp = connected_components(
-        verts, edges, "doc_id", num_rounds=30, until_converged=True
-    ).collect()
+    comp = connected_components(verts, edges, "doc_id", num_rounds=30).collect()
     assert all(r["component"] == 0 for r in comp)
 
 
@@ -782,7 +780,7 @@ def test_connected_components_random_graphs_match_union_find(spark):
         got = {
             r["id"]: r["component"]
             for r in connected_components(
-                verts, edf, "doc_id", num_rounds=20, until_converged=True,
+                verts, edf, "doc_id", num_rounds=20,
                 small_graph_edges=0,
             ).collect()
         }
@@ -930,6 +928,7 @@ class TestStreamingNearDup:
         seen) — the bound that makes an unbounded document stream
         near-dup-able at all. Asserted from the engine's own
         stateOperators metrics, not from inference."""
+        import re
         import time
 
         from genetics_spark_coloc_spark.streaming.pipelines import (
@@ -969,17 +968,22 @@ class TestStreamingNearDup:
                 time.sleep(1.0)  # > timeout: earlier batches go cold
             # settle: let eviction triggers fire past the last timeout
             # (plain polling — processAllAvailable can block behind
-            # the continuous 200ms trigger loop)
+            # the continuous 200ms trigger loop). A loaded host runs
+            # micro-batches seconds behind the trigger, so the state
+            # bound only counts once the source's end offset shows
+            # every batch file consumed (one file per micro-batch; the
+            # file log's offsets count from 0).
             deadline = time.time() + 60
             while time.time() < deadline:
                 time.sleep(1.0)
                 p = q.lastProgress
-                rows_total = (
-                    p["stateOperators"][0]["numRowsTotal"]
-                    if p and p["stateOperators"]
-                    else None
-                )
-                if rows_total is not None and rows_total <= 3 * buckets_per_batch:
+                if not p or not p["stateOperators"]:
+                    continue
+                end = re.search(r"logOffset\D*(\d+)", p["sources"][0]["endOffset"])
+                if end is None or int(end.group(1)) < n_batches - 1:
+                    continue
+                rows_total = p["stateOperators"][0]["numRowsTotal"]
+                if rows_total <= 3 * buckets_per_batch:
                     break
             peak = max(
                 pr["stateOperators"][0]["numRowsTotal"]
@@ -2737,11 +2741,11 @@ def test_wide_keys_parity_dup_ngram_and_spans(spark):
         assert narrow == wide, fn.__name__
 
 
-def test_connected_components_unroll_parity(spark):
-    """unroll=2 stacks two propagate+shortcut steps per
-    materialization — identical labeling to unroll=1 on every shape
-    (chain, clique, isolated vertex), with propagation budget
-    num_rounds x unroll."""
+def test_connected_components_segment_schedule(spark):
+    """The distributed loop labels every shape (chain, clique, pair,
+    isolated vertex) with its component minimum, and its propagation
+    count follows the one schedule: 2 propagations in the first
+    segment, 4 in each later one."""
     from genetics_spark_coloc_spark.operators.graph import (
         connected_components,
     )
@@ -2753,34 +2757,21 @@ def test_connected_components_unroll_parity(spark):
         + [(6, 7), (7, 8), (6, 8), (9, 10)],
         "leftId long, rightId long",
     )
-    base = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            verts, edges, num_rounds=8, until_converged=True,
-            small_graph_edges=0,
-        ).collect()
-    }
     stats: dict = {}
-    unrolled = {
+    got = {
         r["id"]: r["component"]
         for r in connected_components(
             verts,
             edges,
             num_rounds=4,
-            until_converged=True,
-            check_every=2,
-            unroll=2,
             stats_out=stats,
             small_graph_edges=0,
         ).collect()
     }
-    assert base == unrolled
-    # r14 growing schedule: first segment = unroll props, later
-    # segments 2x unroll — propagations lie within that envelope
     assert stats["converged"]
     assert 2 <= stats["propagations"] <= 2 + (stats["rounds"] - 1) * 4
     want = {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 0, 6: 6, 7: 6, 8: 6, 9: 9, 10: 9, 11: 11}
-    assert base == want
+    assert got == want
 
 
 def test_remove_verbatim_matches_policy(spark):
@@ -3364,7 +3355,7 @@ def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
     plain = {
         r["id"]: r["component"]
         for r in connected_components(
-            verts, edges, "doc_id", until_converged=True, num_rounds=10,
+            verts, edges, "doc_id", num_rounds=10,
             small_graph_edges=0,
         ).collect()
     }
@@ -3374,7 +3365,6 @@ def test_connected_components_reliable_checkpoint_dir(spark, tmp_path):
             verts,
             edges,
             "doc_id",
-            until_converged=True,
             num_rounds=10,
             checkpoint_dir=ckpt,
             stats_out=stats,
@@ -3644,7 +3634,6 @@ def test_connected_components_checkpoint_lifecycle(spark, tmp_path):
         verts,
         edges,
         "doc_id",
-        until_converged=True,
         num_rounds=12,
         checkpoint_dir=ckpt,
         stats_out=stats,
@@ -3667,7 +3656,7 @@ def test_connected_components_checkpoint_lifecycle(spark, tmp_path):
     assert len(rdd_dirs) == 1, f"superseded checkpoints not swept: {rdd_dirs}"
     # a second run lands in its OWN subdirectory (no interleaving)
     connected_components(
-        verts, edges, "doc_id", until_converged=True, num_rounds=12,
+        verts, edges, "doc_id", num_rounds=12,
         checkpoint_dir=ckpt, small_graph_edges=0,
     ).collect()
     assert len([d for d in os.listdir(ckpt) if d.startswith("cc_")]) == 2
@@ -3678,9 +3667,9 @@ def _cc_labels(df) -> dict:
 
 
 def test_connected_components_fast_path_leaves_no_checkpoint(spark, tmp_path):
-    """With ``checkpoint_dir`` and ``until_converged`` set, the driver
-    fast path (default ``small_graph_edges``) builds its labels on the
-    driver, so no rdd-* checkpoint dir may remain once it returns."""
+    """With ``checkpoint_dir`` set, the driver fast path (default
+    ``small_graph_edges``) builds its labels on the driver, so no
+    rdd-* checkpoint dir may remain once it returns."""
     import os
 
     from genetics_spark_coloc_spark.operators.graph import (
@@ -3694,7 +3683,7 @@ def test_connected_components_fast_path_leaves_no_checkpoint(spark, tmp_path):
     )
     stats: dict = {}
     out = connected_components(
-        verts, edges, "doc_id", until_converged=True,
+        verts, edges, "doc_id",
         checkpoint_dir=ckpt, stats_out=stats,
     )
     assert _cc_labels(out) == {i: 0 if i <= 4 else i for i in range(10)}
@@ -3720,12 +3709,12 @@ def test_connected_components_null_endpoint_string_ids(spark):
     want = {"a": "a", "b": "a", "c": "a", "e": "e"}
     stats: dict = {}
     fast = _cc_labels(
-        connected_components(verts, edges, until_converged=True, stats_out=stats)
+        connected_components(verts, edges, stats_out=stats)
     )
     assert "small_graph_fast_path_edges" in stats, stats
     assert fast == want
     slow = _cc_labels(
-        connected_components(verts, edges, until_converged=True, small_graph_edges=0)
+        connected_components(verts, edges, small_graph_edges=0)
     )
     assert slow == fast
 
@@ -3749,7 +3738,7 @@ def test_connected_components_null_endpoint_int_ids(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(1, 2), (3, 2), (None, 4)], "leftId long, rightId long"
     )
-    got = _cc_labels(graph.connected_components(verts, edges, until_converged=True))
+    got = _cc_labels(graph.connected_components(verts, edges))
     assert got == {1: 1, 2: 1, 3: 1, 9: 9}
 
 

@@ -1459,9 +1459,7 @@ def test_run_cc_labels_build_append_compact(spark, tmp_path):
         v = spark.createDataFrame([(i,) for i in ids], "id long")
         return {
             r["id"]: r["component"]
-            for r in connected_components(
-                v, edges_df(rows), until_converged=True
-            ).collect()
+            for r in connected_components(v, edges_df(rows)).collect()
         }
 
     def resolved(out):
@@ -1541,9 +1539,7 @@ def test_cc_labels_random_multi_append_equals_full(spark, tmp_path, seed):
         v = spark.createDataFrame([(i,) for i in ids], "id long")
         return {
             r["id"]: r["component"]
-            for r in connected_components(
-                v, edges_df(rows), until_converged=True
-            ).collect()
+            for r in connected_components(v, edges_df(rows)).collect()
         }
 
     out = str(tmp_path / "cc")

@@ -33,9 +33,7 @@ def _build_cc(spark, tmp_path, rows, name="cc"):
     out = str(tmp_path / name)
     ids = sorted({v for e in rows for v in e})
     v = spark.createDataFrame([(i,) for i in ids], "id long")
-    connected_components(
-        v, _edges(spark, rows), until_converged=True
-    ).write.parquet(out)
+    connected_components(v, _edges(spark, rows)).write.parquet(out)
     return out
 
 
@@ -148,9 +146,7 @@ def test_two_concurrent_folds_one_proceeds_one_fails(spark, tmp_path):
     v = spark.createDataFrame([(i,) for i in ids], "id long")
     want = {
         r["id"]: r["component"]
-        for r in connected_components(
-            v, _edges(spark, rows), until_converged=True
-        ).collect()
+        for r in connected_components(v, _edges(spark, rows)).collect()
     }
     got = {
         r["id"]: r["component"] for r in load_cc_labels(spark, out).collect()

@@ -90,8 +90,6 @@ def probe(
         verts,
         edges,
         num_rounds=num_rounds,
-        until_converged=True,
-        check_every=2,
         stats_out=stats,
         checkpoint_dir=checkpoint_dir,
     )

@@ -1882,9 +1882,7 @@ def cc_labels_fold_probes(
             .alias("rightId"),
         ).filter(F.col("leftId") != F.col("rightId")).localCheckpoint(eager=True)
         verts = spark.range(n_vert).select(F.col("id")).localCheckpoint(eager=True)
-        labels = connected_components(
-            verts, hist_edges, until_converged=True, check_every=2, unroll=2
-        )
+        labels = connected_components(verts, hist_edges)
         root = tempfile.mkdtemp(prefix="cc_fold_probe_")
         path = os.path.join(root, "cc_labels")
         labels.write.parquet(path)
@@ -1955,9 +1953,7 @@ def incremental_cc_probes(
         ).filter(F.col("leftId") != F.col("rightId")).localCheckpoint(eager=True)
         verts = spark.range(n_vert).select(F.col("id")).localCheckpoint(eager=True)
         start = time.perf_counter()
-        labels = connected_components(
-            verts, hist_edges, until_converged=True, check_every=2, unroll=2
-        ).localCheckpoint(eager=True)
+        labels = connected_components(verts, hist_edges).localCheckpoint(eager=True)
         build_sec = round(time.perf_counter() - start, 2)
         delta_edges = spark.range(n_delta).select(
             F.when(F.pmod("id", F.lit(2)) == 0, F.pmod(F.hash("id"), F.lit(n_hist)))
@@ -1966,18 +1962,14 @@ def incremental_cc_probes(
             (F.lit(n_vert) + F.lit(n_delta) + F.col("id")).alias("rightId"),
         ).localCheckpoint(eager=True)
         start = time.perf_counter()
-        n_rows = incremental_connected_components(
-            labels, delta_edges, until_converged=True, check_every=2, unroll=2
-        ).count()
+        n_rows = incremental_connected_components(labels, delta_edges).count()
         inc_sec = round(time.perf_counter() - start, 2)
         start = time.perf_counter()
         full_edges = hist_edges.unionByName(delta_edges)
         full_verts = verts.unionByName(
             delta_edges.select(F.col("leftId").alias("id"))
         ).unionByName(delta_edges.select(F.col("rightId").alias("id"))).distinct()
-        n_full = connected_components(
-            full_verts, full_edges, until_converged=True, check_every=2, unroll=2
-        ).count()
+        n_full = connected_components(full_verts, full_edges).count()
         full_sec = round(time.perf_counter() - start, 2)
         print(
             json.dumps(
